@@ -11,8 +11,8 @@ Architecture is Spark-first, not a port:
 
 * input is a table ``(doc_id:string, spans:array<struct<kind,text,media_ref,
   offset:int32>>)`` (an Iceberg table in production; parquet in tests),
-* all extraction runs inside vectorized pandas/Arrow UDFs via
-  ``mapInPandas`` — no per-row Python UDFs anywhere,
+* all extraction runs inside vectorized Arrow kernels via ``mapInArrow``
+  — no per-row Python UDFs anywhere,
 * output span ``order`` is data (a column), never an artifact of row order,
   so results are invariant under any partitioning,
 * skew is handled explicitly (salt + repartition on doc_id),

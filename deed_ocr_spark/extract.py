@@ -1,17 +1,18 @@
-"""Spark extraction stage: vectorized pandas/Arrow kernels via mapInPandas.
+"""Spark extraction stage: vectorized Arrow kernels via mapInArrow.
 
 Design (SURVEY.md §3.4 / §4.2):
 
-* One ``mapInPandas`` does all per-document work — span extraction AND the
+* One ``mapInArrow`` does all per-document work — span extraction AND the
   per-document merge — so extracted span data never shuffles (the per-doc
   merge that would be a UDAF is fused into the same Arrow batch; SURVEY
   §2.4: every merge is intra-document).
 * Inside a batch, work is vectorized across *all spans of all documents at
-  once*: spans are exploded into flat numpy/pandas arrays, kind-dispatched
-  with boolean masks, and the watermark/whitespace cleanup runs as one
-  pandas ``.str`` pass over every text span in the batch. Only the
-  recursive parsers (DOM split, XY-cut) run per-element — unavoidable and
-  allowed (SURVEY §7.3-4); there is no per-row Python UDF anywhere.
+  once*: the ``spans`` list column is exploded columnar into flat numpy
+  arrays (no per-span Python objects), kind-dispatched with boolean masks,
+  and the watermark/whitespace cleanup runs over every text span in the
+  batch. Only the recursive parsers (DOM split, XY-cut) run per-element —
+  unavoidable and allowed (SURVEY §7.3-4); there is no per-row Python UDF
+  anywhere.
 * ``order`` is assigned from the ``offset`` sort inside the kernel and
   emitted as data, so output equality holds under any partitioning.
 """
@@ -234,28 +235,17 @@ def _extract_flat(flat: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def extract_spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, spans) batches → output span rows."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        flat = _explode_batch(pdf)
-        if not len(flat):
-            continue
-        yield _extract_flat(flat)
-
-
 def _explode_recordbatch(rb) -> pd.DataFrame | None:
     """Columnar explode of an Arrow (doc_id, spans) RecordBatch to the flat
     span frame, with zero per-span Python objects.
 
-    The mapInPandas route converts the ``spans`` list<struct> column to one
-    Python dict PER SPAN before the kernel even runs (Arrow→pandas
-    conversion) — at 100 TB that dict materialization is pure overhead.
-    ``list_flatten`` / ``list_parent_indices`` give flat field arrays
-    directly; the per-doc offset sort is the same stable lexsort as
-    ``_explode_batch``; null lists contribute nothing and null text/
-    media_ref become '' exactly like the scalar path."""
+    Converting the ``spans`` list<struct> column to pandas would build one
+    Python dict PER SPAN before the kernel even runs — at 100 TB that dict
+    materialization is pure overhead. ``list_flatten`` /
+    ``list_parent_indices`` give flat field arrays directly; the per-doc
+    offset sort is the same stable lexsort as ``_explode_batch``; null
+    lists contribute nothing and null text/media_ref become '' exactly
+    like the scalar path."""
     import pyarrow.compute as pc
 
     spans = rb.column(rb.schema.get_field_index("spans"))
@@ -340,8 +330,9 @@ def _spans_out_arrow_schema():
 
 
 def extract_spans_batches_arrow(batches) -> Iterator["object"]:
-    """mapInArrow kernel: the production explode path. Output rows are
-    byte-identical to ``extract_spans_batch`` (golden + equality tests)."""
+    """mapInArrow kernel: (doc_id, spans) batches → output span rows.
+    Byte-identical to ``_extract_flat(_explode_batch(pdf))`` evaluated
+    locally and to the golden executor (tests)."""
     import pyarrow as pa
 
     out_schema = _spans_out_arrow_schema()
@@ -421,24 +412,10 @@ def _doc_summaries(out: pd.DataFrame) -> pd.DataFrame:
     ).astype({"n_pages": "int32", "n_spans": "int32", "n_media": "int32"})
 
 
-def extract_doc_summaries_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, spans) batches → per-doc summary rows
-    (extraction + full reference merge fused; zero shuffles)."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        flat = _explode_batch(pdf)
-        if not len(flat):
-            continue
-        yield _doc_summaries(_extract_flat(flat))
-
-
 def extract_doc_summaries_batches_arrow(batches) -> Iterator["object"]:
-    """mapInArrow twin of ``extract_doc_summaries_batch``: columnar explode
-    (no per-span dicts), then the same fused extract+merge. Row-identical
-    to the pandas kernel (equality test)."""
+    """mapInArrow kernel: (doc_id, spans) batches → per-doc summary rows
+    (columnar explode, then extraction + full reference merge fused; zero
+    shuffles)."""
     import pyarrow as pa
 
     out_schema = pa.schema(
@@ -478,24 +455,9 @@ DESC_OUT_DDL = (
 )
 
 
-def extract_descriptions_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, spans) batches → per-description rows."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        flat = _explode_batch(pdf)
-        if not len(flat):
-            continue
-        out = _descriptions_from_flat(_extract_flat(flat))
-        if out is not None:
-            yield out
-
-
 def extract_descriptions_batches_arrow(batches) -> Iterator["object"]:
-    """mapInArrow twin of ``extract_descriptions_batch`` (columnar explode,
-    same per-description rows — equality-tested)."""
+    """mapInArrow kernel: (doc_id, spans) batches → per-description rows
+    (columnar explode; checked against the golden executor)."""
     import pyarrow as pa
 
     out_schema = pa.schema(

@@ -1,10 +1,10 @@
-"""Extraction job pipeline: scan → bucket-aligned repartition → mapInPandas → sink.
+"""Extraction job pipeline: scan → bucket-aligned repartition → mapInArrow → sink.
 
 The physical plan this produces (SURVEY.md §3.4):
 
     Scan (Iceberg in prod, parquet here; column-pruned to doc_id, spans)
       → Exchange hashpartitioning(part_bucket, slice)   -- the ONLY shuffle
-      → ArrowEvalPython / MapInPandas (extract kernel, fused per-doc merge)
+      → MapInArrow (extract kernel, fused per-doc merge)
       → sink (partitionBy(part_bucket) write; dynamic partition overwrite)
 
 The single exchange serves BOTH jobs a 100 TB run needs from it:
@@ -36,9 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 from deed_ocr_spark.extract import (
     DOC_SUMMARY_DDL,
     SPANS_OUT_DDL,
-    extract_doc_summaries_batch,
     extract_doc_summaries_batches_arrow,
-    extract_spans_batch,
     extract_spans_batches_arrow,
 )
 
@@ -91,37 +89,26 @@ def repartition_for_bucketed_write(
     ).drop("_slice")
 
 
-def extract_spans(
-    df: DataFrame, n_partitions: int = 0, use_arrow: bool = True
-) -> DataFrame:
+def extract_spans(df: DataFrame, n_partitions: int = 0) -> DataFrame:
     """Input (doc_id, spans) → output span rows (doc_id, order, kind, text,
-    media_ref, src_kind). Column-prunes the scan explicitly.
+    media_ref, src_kind, status). Column-prunes the scan explicitly.
 
-    ``use_arrow`` (default) runs the kernel via ``mapInArrow``: the spans
-    column is exploded columnar instead of being materialized as one
-    Python dict per span during Arrow→pandas conversion — byte-identical
-    output (tests), lower constant factor. The mapInPandas form stays as
-    the parity baseline and the streaming kernel."""
+    The kernel runs via ``mapInArrow``: the spans column is exploded
+    columnar instead of being materialized as one Python dict per span
+    during Arrow→pandas conversion."""
     src = df.select("doc_id", "spans")
     if n_partitions > 0:
         src = repartition_for_extract(src, n_partitions)
-    if use_arrow:
-        return src.mapInArrow(extract_spans_batches_arrow, SPANS_OUT_DDL)
-    return src.mapInPandas(extract_spans_batch, SPANS_OUT_DDL)
+    return src.mapInArrow(extract_spans_batches_arrow, SPANS_OUT_DDL)
 
 
-def extract_summaries(
-    df: DataFrame, n_partitions: int = 0, use_arrow: bool = True
-) -> DataFrame:
+def extract_summaries(df: DataFrame, n_partitions: int = 0) -> DataFrame:
     """Input (doc_id, spans) → one summary row per document (extraction +
-    reference merge fused in a single Arrow pass; no span shuffle).
-    ``use_arrow`` as in ``extract_spans``."""
+    reference merge fused in a single Arrow pass; no span shuffle)."""
     src = df.select("doc_id", "spans")
     if n_partitions > 0:
         src = repartition_for_extract(src, n_partitions)
-    if use_arrow:
-        return src.mapInArrow(extract_doc_summaries_batches_arrow, DOC_SUMMARY_DDL)
-    return src.mapInPandas(extract_doc_summaries_batch, DOC_SUMMARY_DDL)
+    return src.mapInArrow(extract_doc_summaries_batches_arrow, DOC_SUMMARY_DDL)
 
 
 def partition_metrics(spans_out: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """Pure pandas/numpy extraction kernels — importable without Spark.
 
 Every kernel here is deterministic and side-effect free; the Spark layer
-(`deed_ocr_spark.extract`) calls these from inside ``mapInPandas`` and the
+(`deed_ocr_spark.extract`) calls these from inside ``mapInArrow`` and the
 single-process golden executor (`deed_ocr_spark.golden`) calls the very same
 functions, so Spark-vs-golden parity is structural.
 """

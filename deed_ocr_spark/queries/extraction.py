@@ -1,9 +1,10 @@
 """Extraction-pipeline and multimodal queries (non-SQL-expressible).
 
-These run the engine's own kernels (mapInPandas) over the deterministic
-synthetic interleaved corpus. No oracle_sql entries — the driver records
-rows-only checks; semantic correctness is covered by the golden-executor
-test suite (tests/test_golden_spark_parity.py) instead.
+These run the engine's own kernels over the deterministic synthetic
+interleaved corpus: x1 through ``job.extract_spans`` (mapInArrow), x2/x4/x5
+through one fused generate+extract ``mapInPandas``. No oracle_sql entries —
+these get rows-only checks; semantic correctness is covered by the
+golden-executor test suite (tests/test_golden_spark_parity.py) instead.
 """
 
 from __future__ import annotations
@@ -81,38 +82,6 @@ def x1_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x2_doc_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _fused_summaries(spark, sf_dir)
     # arrays → stable string form so the driver's rows-only check is tidy
-    return out.select(
-        "doc_id",
-        "n_pages",
-        "n_spans",
-        "n_media",
-        "combined_chars",
-        F.array_join("legal_description_block", "␞").alias("legal_descriptions"),
-        F.array_join("trs", "␞").alias("trs"),
-        "details_json",
-    )
-
-
-# --- X3: grouped-UDF alternative (applyInPandas) ------------------------------
-# The engine's default fuses the per-doc merge into the extraction
-# mapInPandas (no shuffle). This is the *relational* formulation — spans
-# grouped by doc_id through an applyInPandas kernel — kept as (a) API
-# coverage of the grouped-pandas path (SURVEY §2.9) and (b) a live
-# cross-check that both formulations agree (tested). At scale the fused
-# path wins by exactly one exchange of the span payload.
-def x3_doc_summaries_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from deed_ocr_spark.extract import _doc_summaries
-
-    spans = extract_spans(_corpus(spark, sf_dir))
-
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _doc_summaries(pdf)
-
-    from deed_ocr_spark.extract import DOC_SUMMARY_DDL
-
-    out = spans.groupBy("doc_id").applyInPandas(per_doc, DOC_SUMMARY_DDL)
     return out.select(
         "doc_id",
         "n_pages",
@@ -250,9 +219,6 @@ def m1_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dec.unionByName(res).unionByName(frm)
 
 
-# x3_doc_summaries_grouped is NOT registered (50-row driver cap): it is the
-# grouped-applyInPandas twin of x2, held equal to the fused path by
-# tests/test_grouped_vs_fused.py every session.
 QUERIES = {
     "x1_extract_spans": x1_extract_spans,
     "x2_doc_summaries": x2_doc_summaries,

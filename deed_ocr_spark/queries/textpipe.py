@@ -929,35 +929,6 @@ def winnow_pair_delta(
     return added, retracted
 
 
-# --- D10: production-path MinHash (rows-only) --------------------------------
-# The oracle-backed d8/d9 use md5 strings for DuckDB portability; at scale
-# the signature should be 64-bit ints through xxhash64 (hash-aggregable
-# min(bigint) → HashAggregate instead of SortAggregate, no string buffers).
-# Semantically identical LSH; only the hash family differs.
-def d10_minhash_fast_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _shingle_rows(spark, sf_dir)
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("sh"))).alias(f"mh{i}") for i in range(4)
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.xxhash64(F.lit("b1"), "mh0", "mh1"),
-                F.xxhash64(F.lit("b2"), "mh2", "mh3"),
-            )
-        ).alias("band"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, "band")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 # --- D15: benchmark-contamination scan (unregistered; 50-row driver cap —
 # DuckDB-oracle-checked in tests/test_contamination.py instead) ---------------
 # The training-data hygiene op the dedup family doesn't cover: flag corpus
@@ -1031,11 +1002,10 @@ def d14_training_keeplist(
 # NOT registered (50-row driver cap): d12_winnow_fingerprints — the
 # winnowing kernel runs inside registered d13 every round and d12's own
 # output is naive-reference cross-checked in tests/test_fingerprint.py —
-# d10_minhash_fast_pairs, the xxhash64 production twin of registered d9
-# (pytest asserts their candidate sets agree) — and, since round 6,
-# d6b_simhash_fast, whose coverage lives entirely in the d6/d6b agreement
-# suite (tests/test_simhash.py). Demotions freed slots for the
-# oracle-backed j6_asof_join and d16_dup_components (components.py).
+# and, since round 6, d6b_simhash_fast, whose coverage lives entirely in
+# the d6/d6b agreement suite (tests/test_simhash.py). Demotions freed
+# slots for the oracle-backed j6_asof_join and d16_dup_components
+# (components.py).
 QUERIES = {
     "d14_training_keeplist": d14_training_keeplist,
     "d13_winnow_dup_pairs": d13_winnow_dup_pairs,

@@ -50,15 +50,7 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deed_ocr_spark.queries.textpipe import (
-    _band_rows,
-    _minhash_sig_from,
-    _band_pairs_from,
-    _shingle_rows,
-    d12_winnow_fingerprints,
-    ngram_jaccard_pairs_from,
-    winnow_dup_pairs_from,
-)
+from deed_ocr_spark.queries.textpipe import _band_rows, _minhash_sig_from
 
 SHINGLES = "shingles"
 MINHASH_SIGS = "minhash_sigs"
@@ -231,8 +223,8 @@ def _corpus_listing(sf_dir: str) -> dict:
     if "://" in sf_dir:
         raise ValueError(
             f"signature tables detect staleness via local os.stat listings; "
-            f"non-local corpus path {sf_dir!r} is not supported — run "
-            "materialize_signatures() to an explicit output dir instead"
+            f"non-local corpus path {sf_dir!r} is not supported — copy the "
+            "corpus to a local directory first"
         )
     p = _docs_parquet_path(sf_dir)
     if os.path.isdir(p):
@@ -1186,55 +1178,6 @@ def ensure_dup_pairs_table(
             fps_snapshot,
             _pairs_full_df(spark, sf_dir, max_df),
         )
-
-
-def materialize_signatures(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> dict[str, str]:
-    """One pass over the corpus per signature family, each written to its
-    own parquet table. The MinHash signatures are derived from the
-    just-written shingle table (not a second tokenize pass), so the corpus
-    text is scanned exactly twice in total: once for shingles, once for
-    winnowing fingerprints."""
-    paths = {
-        SHINGLES: f"{out_dir}/{SHINGLES}",
-        MINHASH_SIGS: f"{out_dir}/{MINHASH_SIGS}",
-        WINNOW_FPS: f"{out_dir}/{WINNOW_FPS}",
-    }
-    _shingle_rows(spark, sf_dir).write.mode("overwrite").parquet(paths[SHINGLES])
-    sh = spark.read.parquet(paths[SHINGLES])
-    _minhash_sig_from(sh).write.mode("overwrite").parquet(paths[MINHASH_SIGS])
-    d12_winnow_fingerprints(spark, sf_dir).write.mode("overwrite").parquet(
-        paths[WINNOW_FPS]
-    )
-    return paths
-
-
-def minhash_band_pairs_from_tables(spark: SparkSession, out_dir: str) -> DataFrame:
-    """d9 over the materialized signature table (no corpus scan at all)."""
-    return _band_pairs_from(spark.read.parquet(f"{out_dir}/{MINHASH_SIGS}"))
-
-
-def ngram_jaccard_pairs_from_tables(
-    spark: SparkSession, out_dir: str, threshold: float = 0.5
-) -> DataFrame:
-    """d7 over the materialized shingle table — the plan reads parquet
-    twice (candidates + intersection join), never re-tokenizes, and needs
-    no session cache."""
-    return ngram_jaccard_pairs_from(
-        spark.read.parquet(f"{out_dir}/{SHINGLES}"), threshold=threshold
-    )
-
-
-def winnow_dup_pairs_from_tables(
-    spark: SparkSession, out_dir: str, min_shared: int = 1, max_df: int = 64
-) -> DataFrame:
-    """d13 over the materialized fingerprint table."""
-    return winnow_dup_pairs_from(
-        spark.read.parquet(f"{out_dir}/{WINNOW_FPS}"),
-        min_shared=min_shared,
-        max_df=max_df,
-    )
 
 
 # --- bucketed signature tables: the exchange-free self-join shape -------------

@@ -148,8 +148,10 @@ def main(argv=None):
     out["incr_sec"] = round(time.monotonic() - t0, 2)
 
     # expected cluster count: chains - merges + splits (every merge joins
-    # two chains, every split cuts one in two, sets disjoint by spacing)
-    exp_k = n_chains - args.merges + args.splits + (1 if n % L else 0)
+    # two chains, every split cuts one in two, sets disjoint by spacing),
+    # plus the partial tail chain — only when it has an edge: a 1-node
+    # remainder is isolated and absent from connected_components' domain
+    exp_k = n_chains - args.merges + args.splits + (1 if n % L > 1 else 0)
     out["expected_clusters"] = exp_k
     out["verdict_equal"] = (
         "skip" if args.skip_full

@@ -199,8 +199,8 @@ def main(argv=None):
         processed_parts,
         read_signature_table,
         winnow_dup_pairs_delta,
-        winnow_dup_pairs_from,
     )
+    from deed_ocr_spark.queries.textpipe import winnow_dup_pairs_from
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

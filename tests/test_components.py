@@ -331,7 +331,7 @@ def test_release_checkpoint_frees_pinned_blocks(spark):
     )
 
 
-@pytest.mark.parametrize("stride", [1])
+@pytest.mark.parametrize("stride", [1, 2])
 def test_components_stride_rounds_identical_labels(spark, stride):
     """Any materialization stride yields the same fixpoint labels (the
     r6 NEXT #6 I/O trade only changes WHEN lineage is truncated):

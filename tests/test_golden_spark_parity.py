@@ -116,14 +116,17 @@ def test_descriptions_confidence_parity_and_p6_filter(spark):
     """x5: per-description rows match the golden executor's
     find_descriptions_in_pages exactly; the P6 threshold (llm.py:109-118)
     keeps only confidence > 0.5."""
-    from deed_ocr_spark.extract import DESC_OUT_DDL, extract_descriptions_batch
+    from deed_ocr_spark.extract import (
+        DESC_OUT_DDL,
+        extract_descriptions_batches_arrow,
+    )
     from deed_ocr_spark.golden import extract_doc
     from deed_ocr_spark.kernels.legal import find_descriptions_in_pages
     from pyspark.sql import functions as F
 
     df = corpus_df(spark, 60, seed=SEED, n_partitions=3)
-    all_rows = df.select("doc_id", "spans").mapInPandas(
-        extract_descriptions_batch, DESC_OUT_DDL
+    all_rows = df.select("doc_id", "spans").mapInArrow(
+        extract_descriptions_batches_arrow, DESC_OUT_DDL
     )
     kept = all_rows.filter(F.col("confidence") > 0.5).collect()
     got = {}
@@ -151,10 +154,11 @@ def test_descriptions_confidence_parity_and_p6_filter(spark):
 
 
 def test_arrow_and_pandas_extraction_paths_identical(spark):
-    """The mapInArrow production path (columnar list_flatten explode) must
-    be row-identical to the mapInPandas parity baseline — including null
-    spans arrays, empty arrays, null text/media_ref, and duplicate offsets
-    (stable tie order)."""
+    """The mapInArrow route (columnar list_flatten explode) must be
+    row-identical to the pandas explode + extract functions evaluated
+    locally on the collected input — including null spans arrays, empty
+    arrays, null text/media_ref, and duplicate offsets (stable tie
+    order)."""
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -163,10 +167,21 @@ def test_arrow_and_pandas_extraction_paths_identical(spark):
         StructType,
     )
 
+    from deed_ocr_spark.extract import _explode_batch, _extract_flat
+
+    def via_spark(df):
+        return sorted(tuple(r) for r in extract_spans(df).collect())
+
+    def via_local(df):
+        flat = _explode_batch(df.select("doc_id", "spans").toPandas())
+        out = _extract_flat(flat)
+        return sorted(
+            (d, int(o), *rest)
+            for d, o, *rest in out.itertuples(index=False, name=None)
+        )
+
     df = corpus_df(spark, 80, seed=SEED, n_partitions=3)
-    a = sorted(tuple(r) for r in extract_spans(df, use_arrow=True).collect())
-    p = sorted(tuple(r) for r in extract_spans(df, use_arrow=False).collect())
-    assert a == p
+    assert via_spark(df) == via_local(df)
 
     schema = StructType(
         [
@@ -199,54 +214,6 @@ def test_arrow_and_pandas_extraction_paths_identical(spark):
         ],
         schema,
     )
-    a2 = sorted(tuple(r) for r in extract_spans(nasty, use_arrow=True).collect())
-    p2 = sorted(tuple(r) for r in extract_spans(nasty, use_arrow=False).collect())
-    assert a2 == p2 and len(a2) == 6
+    a2 = via_spark(nasty)
+    assert a2 == via_local(nasty) and len(a2) == 6
     assert sum(1 for r in a2 if r[0] == "d5") == 1
-
-
-def test_arrow_and_pandas_summaries_paths_identical(spark):
-    """extract_summaries' mapInArrow twin must be row-identical to the
-    mapInPandas kernel (same fused extract+merge, columnar explode)."""
-    from deed_ocr_spark.job import extract_summaries
-
-    def rows(use_arrow):
-        return sorted(
-            (
-                r["doc_id"],
-                r["n_pages"],
-                r["n_spans"],
-                r["n_media"],
-                r["combined_chars"],
-                tuple(r["legal_description_block"]),
-                tuple(r["trs"]),
-                r["details_json"],
-            )
-            for r in extract_summaries(
-                corpus_df(spark, 80, seed=SEED, n_partitions=3),
-                use_arrow=use_arrow,
-            ).collect()
-        )
-
-    assert rows(True) == rows(False)
-
-
-def test_arrow_and_pandas_descriptions_paths_identical(spark):
-    from deed_ocr_spark.extract import (
-        DESC_OUT_DDL,
-        extract_descriptions_batch,
-        extract_descriptions_batches_arrow,
-    )
-
-    src = corpus_df(spark, 80, seed=SEED, n_partitions=3).select("doc_id", "spans")
-    a = sorted(
-        tuple(r)
-        for r in src.mapInArrow(
-            extract_descriptions_batches_arrow, DESC_OUT_DDL
-        ).collect()
-    )
-    p = sorted(
-        tuple(r)
-        for r in src.mapInPandas(extract_descriptions_batch, DESC_OUT_DDL).collect()
-    )
-    assert a == p and len(a) > 0

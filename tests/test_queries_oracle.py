@@ -102,33 +102,3 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
-
-
-def test_d10_fast_minhash_recovers_exact_duplicates(spark, tmp_path):
-    """d10_minhash_fast_pairs left the driver registry (slot freed for the
-    oracle-backed j6_asof_join) — keep it tested here on a planted corpus:
-    identical-text documents MUST pair under any MinHash family (equal
-    shingle sets ⇒ every per-seed minimum agrees ⇒ same bands), near-
-    identical long documents should pair, and unrelated documents must not
-    flood the candidate set (doc_a < doc_b, no self-pairs)."""
-    from pyspark.sql import functions as F
-
-    from deed_ocr_spark.queries.textpipe import d10_minhash_fast_pairs
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank "
-    rows = [
-        (1, base * 8),
-        (2, base * 8),                        # exact duplicate of 1
-        (3, base * 8 + "extra trailing words here"),  # near-dup (probabilistic under 2 bands; not asserted)
-        (4, "completely different content about spark query planning " * 8),
-        (5, "yet another unrelated document mentioning winnowing once " * 8),
-    ]
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "documents.parquet"))
-
-    pairs = d10_minhash_fast_pairs(spark, str(tmp_path))
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert all(a < b for a, b in got)
-    assert (1, 2) in got                       # exact dup: guaranteed
-    assert not {p for p in got if 4 in p or 5 in p}  # no unrelated pairs

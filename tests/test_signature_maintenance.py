@@ -38,8 +38,10 @@ def test_secure_cache_root_creates_private_dir(tmp_path):
 def test_corpus_listing_rejects_object_store_paths():
     """Staleness detection is os.stat-based; an s3a:// corpus must fail
     with a clear message, not a FileNotFoundError deep inside d7."""
-    with pytest.raises(ValueError, match="non-local corpus path"):
+    with pytest.raises(ValueError, match="non-local corpus path") as exc:
         sig._corpus_listing("s3a://bucket/sf0.01")
+    # the message must not point at an API that no longer exists
+    assert "materialize_signatures" not in str(exc.value)
     with pytest.raises(ValueError, match="non-local corpus path"):
         sig.ensure_signature_table(None, "hdfs://nn/sf0.01", sig.SHINGLES)
 

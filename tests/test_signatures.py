@@ -1,52 +1,8 @@
-"""Materialized signature tables must reproduce the in-session dedup
-results exactly, and the from-table plans must not depend on the session
-cache (no InMemoryTableScan) nor contain a cartesian product."""
-
-import pytest
-
-from deed_ocr_spark.queries.textpipe import (
-    d7_ngram_jaccard_pairs,
-    d9_minhash_band_pairs,
-    d13_winnow_dup_pairs,
-)
-from deed_ocr_spark.signatures import (
-    materialize_signatures,
-    minhash_band_pairs_from_tables,
-    ngram_jaccard_pairs_from_tables,
-    winnow_dup_pairs_from_tables,
-)
+"""Content-keyed signature tables: build once, reuse while the corpus is
+unchanged, rebuild into a fresh version on change, append only new parts,
+and replay a crashed append without duplicating rows."""
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def sig_dir(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("sigs"))
-    paths = materialize_signatures(spark, SF, out)
-    assert set(paths) == {"shingles", "minhash_sigs", "winnow_fps"}
-    return out
-
-
-def _rows(df):
-    return {tuple(r) for r in df.collect()}
-
-
-def test_minhash_pairs_match_in_session(spark, sig_dir):
-    assert _rows(minhash_band_pairs_from_tables(spark, sig_dir)) == _rows(
-        d9_minhash_band_pairs(spark, SF)
-    )
-
-
-def test_jaccard_pairs_match_in_session(spark, sig_dir):
-    assert _rows(ngram_jaccard_pairs_from_tables(spark, sig_dir)) == _rows(
-        d7_ngram_jaccard_pairs(spark, SF)
-    )
-
-
-def test_winnow_pairs_match_in_session(spark, sig_dir):
-    assert _rows(winnow_dup_pairs_from_tables(spark, sig_dir)) == _rows(
-        d13_winnow_dup_pairs(spark, SF)
-    )
 
 
 def test_ensure_signature_table_caches_and_detects_staleness(spark, tmp_path, monkeypatch):
@@ -162,17 +118,6 @@ def test_ensure_signature_table_append_replay_is_idempotent(spark, tmp_path, mon
     sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES)
     assert sig.read_signature_table(spark, p).count() == n_after, "replay duplicated rows"
     assert sig._read_manifest(p) != pre_append_manifest
-
-
-def test_from_table_plans_are_cache_free_and_cartesian_free(spark, sig_dir):
-    for df in (
-        minhash_band_pairs_from_tables(spark, sig_dir),
-        ngram_jaccard_pairs_from_tables(spark, sig_dir),
-        winnow_dup_pairs_from_tables(spark, sig_dir),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" not in plan
-        assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
 def test_ensure_signature_table_replay_with_grown_part_set(spark, tmp_path, monkeypatch):

@@ -72,19 +72,25 @@ def gen_documents(out_dir, n):
         texts.append(" ".join(parts))
     # plant exact dups (~0.16%) and near-dup pairs (~2.4% of docs in a pair,
     # one-word mutation) so the LSH/jaccard family sees the driver-tier regime
-    # (candidate pairs << corpus).
+    # (candidate pairs << corpus). Source i is copied to target n//2 + i;
+    # exact sources come from [0, n//4) and near-dup sources from
+    # [n//4, n//2), so the two target bands are disjoint and no plant
+    # overwrites another.
     n_exact = max(1, n // 625)
     n_near = max(1, n // 42)
-    exact_idx = rng.choice(n // 2, size=n_exact, replace=False)
-    for j, i in enumerate(exact_idx):
+    exact_idx = rng.choice(n // 4, size=n_exact, replace=False)
+    for i in exact_idx:
         texts[n // 2 + i] = texts[i]
-    near_idx = rng.choice(np.setdiff1d(np.arange(n // 2), exact_idx),
-                          size=n_near, replace=False)
+    near_idx = n // 4 + rng.choice(n // 2 - n // 4, size=n_near, replace=False)
     for i in near_idx:
         src = texts[i].split()
         if len(src) > 3:
-            src[rng.integers(0, len(src))] = VOCAB[rng.integers(0, len(VOCAB))]
-        texts[n // 2 + n // 4 + i % (n // 4)] = " ".join(src)
+            # a nonzero shift always swaps in a DIFFERENT word, so a
+            # near-dup never degenerates into an extra exact dup
+            j = rng.integers(0, len(src))
+            shift = rng.integers(1, len(VOCAB))
+            src[j] = VOCAB[(VOCAB.index(src[j]) + shift) % len(VOCAB)]
+        texts[n // 2 + i] = " ".join(src)
     lang = rng.choice(LANGS, size=n, p=LANG_P)
     source = np.array([f"src{i % 20}" for i in rng.integers(0, 20, size=n)])
     tbl = pa.table({
@@ -132,9 +138,7 @@ def gen_orders_lineitem(out_dir, n_orders, n_li, n_cust, n_part, n_supp):
     })
     _write(out_dir, "orders", tbl)
     okey = np.sort(rng.integers(0, n_orders, size=n_li))
-    lineno = np.ones(n_li, np.int32)
     same = np.concatenate(([False], okey[1:] == okey[:-1]))
-    run = np.zeros(n_li, np.int64)
     idx = np.arange(n_li)
     start = np.where(~same, idx, 0)
     np.maximum.accumulate(start, out=start)
