@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Far above the O(log^2 n) bound for any feasible corpus (n = 10^12 =>
@@ -44,22 +44,10 @@ MAX_ROUNDS = 64
 # shuffles on node id, and the edge multiset both starts huge (10^8+ pair
 # edges on a crawl corpus) and SHRINKS monotonically — a fixed session
 # default either makes multi-GB partitions early or thousands of empty
-# ones late. Each materialization stride re-derives the partition count
-# from the CURRENT edge count; AQE coalescing then trims the tail.
+# ones late. Each round re-derives the partition count from the CURRENT
+# edge count; AQE coalescing then trims the tail.
 EDGES_PER_PARTITION = 2_000_000
 MAX_ROUND_PARTITIONS = 4096
-
-# Adaptive materialization stride (round 7): below this live edge count a
-# star round's cost is dominated by fixed per-action overheads (job
-# launch, digest aggregation, checkpoint bookkeeping), so two rounds per
-# localCheckpoint halve the action count; at or above it each round's two
-# node-keyed shuffles of the edge multiset dominate, so per-round
-# materialization + per-round fixpoint detection win (no expensive
-# overshoot rounds, shallower plans). 10M ~= 5 EDGES_PER_PARTITION-sized
-# shuffle partitions — the point where a round stops being latency-priced
-# on the reference 32-core box; measured crossover evidence in BENCH.md
-# ("Materialization stride").
-ADAPTIVE_STRIDE_EDGES = 10_000_000
 
 
 def _round_partitions(spark: SparkSession, n_edges: int) -> int:
@@ -121,7 +109,7 @@ def _release_checkpoint(df: DataFrame) -> None:
     a no-op for them — the persistence lives on the underlying RDD inside
     the LogicalRDD plan node, not in the CacheManager. Verified: the plan
     route drops the entry from getPersistentRDDs; without it a 10⁸-edge
-    run accumulates every stride's blocks and starves execution memory
+    run accumulates every round's blocks and starves execution memory
     (UNABLE_TO_ACQUIRE_MEMORY — observed). Best-effort: if the internal
     accessor moves in a future Spark, blocks merely stay resident (the
     pre-round-6 behavior)."""
@@ -131,73 +119,48 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def _digest(e: DataFrame):
-    """(edge_count, order-free hash) — the per-round fixpoint scalar."""
-    row = e.agg(
+def _checkpoint_with_digest(e: DataFrame):
+    """Materialize ``e`` (eager localCheckpoint) and return it with its
+    (edge_count, order-free hash) — the per-round fixpoint scalar,
+    observed by the checkpoint's own action instead of a second job."""
+    obs = Observation()
+    e = e.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"]) if row["h"] is not None else 0
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return e, (int(m["n"]), int(m["h"]) if m["h"] is not None else 0)
 
 
 def connected_components(
     pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b",
-    stats: dict | None = None, stride_rounds: int | None = None
+    stats: dict | None = None
 ) -> DataFrame:
     """(doc_id, component) for every node appearing in ``pairs``; the
     component label is the smallest doc_id in the component.
 
     Iterates large-star / small-star to a fixpoint, materializing with
-    ``localCheckpoint`` every stride (lineage otherwise stacks O(rounds)
-    deep and the planner re-derives the whole chain every action; on a
-    cluster with a configured checkpoint dir, ``checkpoint`` is the
-    fault-tolerant drop-in — GraphFrames does the same every few
-    rounds). The stride length is regime-dependent and by default
-    ADAPTIVE per stride on the live edge count (round 7, measured —
-    BENCH.md "Materialization stride"):
+    ``localCheckpoint`` after EVERY round (lineage otherwise stacks
+    O(rounds) deep and the planner re-derives the whole chain every
+    action; on a cluster with a configured checkpoint dir, ``checkpoint``
+    is the fault-tolerant drop-in — GraphFrames does the same every few
+    rounds). The checkpoint's own action also observes the round's
+    (count, hash) digest, so a round costs one driver action.
 
-    * SMALL graphs (< ADAPTIVE_STRIDE_EDGES): 2 rounds per stride —
-      fixed per-action costs (job launch, digest aggregation, checkpoint
-      bookkeeping) dominate, so halving the action count wins
-      (round-5 VERDICT #4). This is the pre-round-7 behavior, byte-for-
-      byte, at every driver-measured tier.
-    * LARGE graphs: 1 round per stride — each round shuffles the
-      still-huge edge multiset twice, so the 2-round stride's coarser
-      fixpoint detection overshoots by up to 2 EXPENSIVE rounds, and
-      its deeper unmaterialized plan (each star round references its
-      input ~4×) costs real planning/recompute. Measured at 2×10⁷
-      chain edges (same-window interleaved pairs): stride 1
-      {208, 135 s, 10 rounds} vs stride 2 {216, 216 s, 12 rounds}.
-
-    Strides LONGER than 2 are refused: with ~4× input fan-out per round
-    and no common-subtree sharing in Catalyst, a k-round unmaterialized
-    stride plans ~4^k subtree copies — a 64-edge toy converges in 21 s
-    at stride 2 and did not finish in 8.5 min at stride 3 (BENCH.md),
-    settling r6 NEXT #6 (checkpoint-every-4-rounds) structurally: the
-    I/O saved per materialization can never outrun quartic planning
-    growth. Fixpoint detection across a stride of 1 or 2 is sound
-    because the alternation's potential function strictly decreases
-    until the star forest is reached (Kiveris et al. Thm 2) — an
-    unchanged digest over k rounds cannot be a k-cycle.
-
-    ``stride_rounds``: None (default) = adaptive as above; 1 or 2 pins
-    the stride for the whole run (the scale smokes' A/B knob).
+    Fixpoint detection per round is sound because the alternation's
+    potential function strictly decreases until the star forest is
+    reached (Kiveris et al. Thm 2): an unchanged digest across one round
+    is the fixpoint, not a cycle.
 
     Pass a dict as ``stats`` to receive {"rounds": int} for convergence
     telemetry (the scale smoke records it)."""
-    if stride_rounds not in (None, 1, 2):
-        raise ValueError(
-            "stride_rounds must be None (adaptive), 1 or 2: the star "
-            "rounds fan out their input ~4x each, so a k-round "
-            "unmaterialized stride plans ~4^k subtree copies (see "
-            "docstring / BENCH.md round 7)"
-        )
-    e0 = _canonical_edges(pairs, src, dst).localCheckpoint(eager=True)
+    e0, prev = _checkpoint_with_digest(_canonical_edges(pairs, src, dst))
     # nodes derive from the CHECKPOINTED frame — lineage through `pairs`
     # would re-execute the whole upstream pair query (d13's corpus
     # self-join) inside the centers anti-join on every downstream action —
     # and are MATERIALIZED here so e0's blocks can be released once the
-    # first stride supersedes it (see unpersist below)
+    # first round supersedes it (see unpersist below)
     nodes = (
         _symmetrize(e0)
         .select(F.col("u").alias("doc_id"))
@@ -208,7 +171,6 @@ def connected_components(
     spark = e0.sparkSession
     orig_parts = spark.conf.get("spark.sql.shuffle.partitions")
     e = e0
-    prev = _digest(e0)
     rounds = 0
     try:
         while rounds < MAX_ROUNDS:
@@ -216,17 +178,16 @@ def connected_components(
                 "spark.sql.shuffle.partitions",
                 str(_round_partitions(spark, prev[0])),
             )
-            stride = stride_rounds or (
-                1 if prev[0] >= ADAPTIVE_STRIDE_EDGES else 2
-            )
-            nxt = e
-            for _ in range(stride):
-                nxt = _small_star(_symmetrize(_large_star(_symmetrize(nxt))))
-            e_next = nxt.localCheckpoint(eager=True)
-            rounds += stride
-            cur = _digest(e_next)
+            # One round per checkpoint, never more: each star round
+            # references its input ~4x and Catalyst shares no common
+            # subtrees, so an unmaterialized k-round stride plans ~4^k
+            # subtree copies; stride 2 measured slower than stride 1 at
+            # 3.6k, 3x10^5, 2x10^7 and 10^8 edges (BENCH.md, CHANGES.md).
+            nxt = _small_star(_symmetrize(_large_star(_symmetrize(e))))
+            e_next, cur = _checkpoint_with_digest(nxt)
+            rounds += 1
             # e_next is materialized and never references e, so the
-            # superseded stride's pinned blocks are safe to drop
+            # superseded round's pinned blocks are safe to drop
             _release_checkpoint(e)
             e = e_next
             if cur == prev:

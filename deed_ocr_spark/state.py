@@ -196,7 +196,6 @@ def run_extraction_job(
     ``only_buckets`` exists for fault-injection tests: it truncates the run
     after a subset of buckets, simulating a mid-job crash.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucketed = with_partition_bucket(input_df.select("doc_id", "spans"), n_buckets)
 
     # Pending = buckets with no terminal ledger row. The ledger is tiny
@@ -240,7 +239,12 @@ def run_extraction_job(
 
     # 1) data commit: dynamic overwrite replaces exactly the re-run buckets
     t_write0 = time.time()
-    spans_out.write.mode("overwrite").partitionBy("part_bucket").parquet(out_dir)
+    (
+        spans_out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_bucket")
+        .parquet(out_dir)
+    )
     t_write = time.time() - t_write0
 
     # 2) state commit (after data): per-bucket metrics ledger. The re-read

@@ -16,6 +16,12 @@ convergence scalar inside the operator and the final three counts.
 
 Run:  python scripts/components_scale_smoke.py --nodes 20000000 --chain 512
 
+Quick A/B point on a 4-core machine (3x10^5 chain edges, 10 rounds, about
+40 s):
+
+      python scripts/components_scale_smoke.py --nodes 300000 --chain 512 \
+          --driver-mem 4g
+
 Prints one JSON line: sizes, convergence rounds, wall seconds, verdicts.
 """
 
@@ -36,10 +42,6 @@ def main(argv=None):
     p.add_argument("--driver-mem", default="24g",
                    help="JVM heap; the 10^8-edge tier wants 48g on a "
                         "128 GiB box (see BENCH.md round-7 note)")
-    p.add_argument("--stride-rounds", type=int, default=0,
-                   help="star rounds per localCheckpoint materialization: "
-                        "0 = the operator's edge-count-adaptive default, "
-                        "1/2 pin the stride (the r6 NEXT #6 A/B knob)")
     args = p.parse_args(argv)
     if args.chain < 2:
         p.error("--chain must be >= 2 (length-1 chains have no edges)")
@@ -69,9 +71,7 @@ def main(argv=None):
 
     stats: dict = {}
     t0 = time.monotonic()
-    comp = connected_components(
-        edges, stats=stats, stride_rounds=args.stride_rounds or None
-    )
+    comp = connected_components(edges, stats=stats)
     agg = comp.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count_distinct("component").alias("n_clusters"),
@@ -90,7 +90,6 @@ def main(argv=None):
         "chain_len": L,
         "edges": (n - 1) - len(range(L - 1, n - 1, L)),
         "cpus": cpus,
-        "stride_rounds": args.stride_rounds,
         "rounds": stats["rounds"],
         "wall_sec": wall,
         "clusters": int(agg["n_clusters"]),

@@ -31,9 +31,9 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
-def _run(spark, edges):
+def _run(spark, edges, stats=None):
     df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    out = connected_components(df)
+    out = connected_components(df, stats=stats)
     return {r["doc_id"]: r["component"] for r in out.collect()}
 
 
@@ -59,10 +59,15 @@ def test_components_local_minimum_bridges(spark):
 
 def test_components_long_chain_converges(spark):
     """512-node chain: the adversarial depth case for label propagation;
-    the alternating algorithm must converge well under MAX_ROUNDS."""
+    the alternating algorithm must converge well under MAX_ROUNDS. One
+    star round per checkpoint takes exactly 10 rounds here; two rounds
+    per checkpoint took 12, so a return to multi-round strides fails
+    this pin."""
     edges = [(i, i + 1) for i in range(511)]
-    got = _run(spark, edges)
+    stats = {}
+    got = _run(spark, edges, stats)
     assert got == {n: 0 for n in range(512)}
+    assert stats["rounds"] == 10
 
 
 @pytest.mark.parametrize("seed,n,m", [(7, 200, 150), (8, 300, 420)])
@@ -331,11 +336,33 @@ def test_release_checkpoint_frees_pinned_blocks(spark):
     )
 
 
+def _strided_labels(spark, edges, stride):
+    """Reference loop: ``stride`` star rounds per materialization, fixpoint
+    on the collected edge set, labels read off the star forest."""
+    import deed_ocr_spark.queries.components as C
+
+    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+    e = C._canonical_edges(df, "doc_a", "doc_b").localCheckpoint(eager=True)
+    prev = {(r["u"], r["v"]) for r in e.collect()}
+    for _ in range(C.MAX_ROUNDS):
+        for _ in range(stride):
+            e = C._small_star(C._symmetrize(C._large_star(C._symmetrize(e))))
+        e = e.localCheckpoint(eager=True)
+        cur = {(r["u"], r["v"]) for r in e.collect()}
+        if cur == prev:
+            break
+        prev = cur
+    labels = {n: n for edge in edges for n in edge}
+    labels.update(dict(cur))
+    return labels
+
+
 @pytest.mark.parametrize("stride", [1, 2])
 def test_components_stride_rounds_identical_labels(spark, stride):
-    """Any materialization stride yields the same fixpoint labels (the
-    r6 NEXT #6 I/O trade only changes WHEN lineage is truncated):
-    adversarial chain + star + random edges, compared to the default."""
+    """Adversarial chain + star + random edges in one graph: the
+    one-round-per-checkpoint labels equal the union-find oracle and the
+    fixpoint of the same round operators materialized every ``stride``
+    rounds (the stride only moves where lineage is cut)."""
     rng = random.Random(1234)
     edges = (
         [(i, i + 1) for i in range(64)]              # depth
@@ -346,43 +373,49 @@ def test_components_stride_rounds_identical_labels(spark, stride):
         ]
     )
     edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    base = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(df).collect()
-    }
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(df, stride_rounds=stride).collect()
-    }
-    assert got == base == _union_find(edges)
+    got = _run(spark, edges)
+    assert got == _union_find(edges)
+    assert _strided_labels(spark, edges, stride) == got
 
 
-def test_components_stride_rounds_validation(spark):
-    """Strides > 2 are refused up front: the star rounds fan out their
-    input ~4x each, so an unmaterialized k-round stride plans ~4^k
-    subtree copies — a 64-edge toy graph hung at stride 3 (BENCH.md)."""
-    df = spark.createDataFrame([(1, 2)], "doc_a bigint, doc_b bigint")
-    for bad in (0, 3, 4):
-        with pytest.raises(ValueError, match="stride_rounds"):
-            connected_components(df, stride_rounds=bad)
-
-
-def test_components_adaptive_stride_crossing(spark, monkeypatch):
-    """The adaptive stride switches MID-LOOP as the edge multiset
-    shrinks (a clique collapses 190 -> 19 edges): labels must equal the
-    union-find oracle across the regime boundary."""
-    import deed_ocr_spark.queries.components as C
-
-    monkeypatch.setattr(C, "ADAPTIVE_STRIDE_EDGES", 50)
+def test_components_clique_collapse_and_chain(spark):
+    """A clique collapses 190 -> 19 edges in its first rounds while a
+    disjoint chain is still deepening: labels equal the union-find
+    oracle."""
     clique = [(a, b) for a in range(20) for b in range(a + 1, 20)]
     chain = [(100 + i, 101 + i) for i in range(30)]
     edges = clique + chain
-    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    stats = {}
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(df, stats=stats).collect()
-    }
-    assert got == _union_find(edges)
-    assert stats["rounds"] >= 2
+    assert _run(spark, edges) == _union_find(edges)
+
+
+_PARTS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture()
+def caller_parts(spark):
+    """A caller's shuffle width that no round would pick, restored after."""
+    prior = spark.conf.get(_PARTS)
+    spark.conf.set(_PARTS, "13")
+    yield "13"
+    spark.conf.set(_PARTS, prior)
+
+
+def test_components_restores_shuffle_partitions(spark, caller_parts):
+    """The per-round shuffle width is set on the session; the caller's
+    value is back once connected_components returns."""
+    edges = [(i, i + 1) for i in range(16)]
+    assert _run(spark, edges) == _union_find(edges)
+    assert spark.conf.get(_PARTS) == caller_parts
+
+
+def test_components_restores_shuffle_partitions_on_raise(
+    spark, caller_parts, monkeypatch
+):
+    """A loop that hits MAX_ROUNDS raises, and the caller's shuffle width
+    is still restored."""
+    import deed_ocr_spark.queries.components as C
+
+    monkeypatch.setattr(C, "MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _run(spark, [(i, i + 1) for i in range(16)])
+    assert spark.conf.get(_PARTS) == caller_parts

@@ -6,6 +6,8 @@ and state-ledger monotonicity — the reference's retry semantics
 (/root/reference/deed_ocr/utils/retry_helper.py:186-222) as anti-join.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -202,3 +204,41 @@ def test_metrics_ledger_counts(spark, dirs):
     ).collect()[0]
     assert row["p"] == out.filter(F.col("src_kind") == "pdf_page").count()
     assert row["o"] == out.filter(F.col("src_kind") == "ocr_region").count()
+
+
+def test_resume_leaves_session_overwrite_mode_alone(spark, dirs):
+    """The bucket write asks for dynamic partition overwrite per write, not
+    on the session: a caller's ``static`` setting survives a run plus a
+    partial re-run, and the re-run replaces only the buckets it wrote."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out_dir, state_dir = dirs
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        df = corpus_df(spark, N_DOCS, seed=7, n_partitions=4)
+        run_extraction_job(
+            spark, df, out_dir, state_dir, run_id="r1",
+            n_buckets=N_BUCKETS, only_buckets=[0, 1, 2],
+        )
+
+        def listing():
+            return {
+                d: sorted(os.listdir(os.path.join(out_dir, d)))
+                for d in os.listdir(out_dir)
+                if d.startswith("part_bucket=")
+            }
+
+        first = listing()
+        assert sorted(first) == [f"part_bucket={b}" for b in (0, 1, 2)]
+        run_extraction_job(
+            spark, df, out_dir, state_dir, run_id="r2", n_buckets=N_BUCKETS
+        )
+        assert spark.conf.get(key) == "static"
+        after = listing()
+        assert sorted(after) == sorted(
+            f"part_bucket={b}" for b in range(N_BUCKETS)
+        )
+        # r1's buckets keep their exact files: r2 replaced only its own
+        assert {d: after[d] for d in first} == first
+    finally:
+        spark.conf.set(key, prior)
