@@ -8,7 +8,6 @@ functions, so Spark-vs-golden parity is structural.
 
 from deed_ocr_spark.kernels.textops import (
     clean_watermarks,
-    clean_watermarks_series,
     ordered_dedup,
     page_concat,
 )
@@ -30,7 +29,6 @@ from deed_ocr_spark.kernels.mergeops import (
 
 __all__ = [
     "clean_watermarks",
-    "clean_watermarks_series",
     "ordered_dedup",
     "page_concat",
     "strip_html_boilerplate",

@@ -17,8 +17,6 @@ from __future__ import annotations
 import re
 from typing import Iterable, List, Sequence
 
-import pandas as pd
-
 # The full watermark list from the reference's final post-process pass
 # (workflow.py:713-718). Order matters: "UNOFFICIAL COPY" is removed first,
 # which makes the doubled entry a no-op in practice (kept for parity), then
@@ -55,17 +53,6 @@ def clean_watermarks(text: str, watermarks: Sequence[str] = WATERMARKS_FULL) -> 
     if "  " in text:
         text = _RE_MULTI_SPACE.sub(" ", text)
     return text.strip()
-
-
-def clean_watermarks_series(
-    s: pd.Series, watermarks: Sequence[str] = WATERMARKS_FULL
-) -> pd.Series:
-    """Cleanup over a pandas string Series — same function per element as
-    the scalar path, so byte-parity is structural (and the substring guards
-    beat a pandas .str regex chain that cannot skip elements)."""
-    if tuple(watermarks) == WATERMARKS_FULL:
-        return s.map(clean_watermarks)
-    return s.map(lambda t: clean_watermarks(t, watermarks))
 
 
 def ordered_dedup(items: Iterable[str]) -> List[str]:

@@ -216,20 +216,12 @@ def shingle_rows_of(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingle_rows_of(_docs_rebalanced(spark, sf_dir))
-
-
 def _minhash_sig_from(sh: DataFrame) -> DataFrame:
     mins = [
         F.min(F.md5(F.concat(F.lit(f"seed{i}:"), F.col("sh")))).alias(f"mh{i}")
         for i in range(4)
     ]
     return sh.groupBy("doc_id").agg(*mins)
-
-
-def d8_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_sig_from(_shingle_rows(spark, sf_dir))
 
 
 # --- D9: MinHash LSH band candidates (2 bands × 2 rows) ----------------------
@@ -323,54 +315,27 @@ def _band_cand_docs(bands: DataFrame) -> DataFrame:
     )
 
 
-def _band_pairs_from(sig: DataFrame) -> DataFrame:
-    # one signature pass → explode to (doc_id, band) → band self-join
-    return _band_pairs_of(_band_rows(sig))
-
-
-def d9_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _band_pairs_from(d8_minhash_sig(spark, sf_dir))
-
-
 # --- D7: n-gram (shingle) Jaccard near-dup pairs over LSH candidates ---------
 # Relational Jaccard: |A∩B| via shingle equi-join, |A∪B| = |A|+|B|-|A∩B|.
 # Candidates come from d9 (LSH) so no cross join exists anywhere in the plan.
-# The shingle rows feed BOTH the signature/candidate subtree and the
-# intersection join; without reuse the full tokenize+explode pass runs
-# twice over the corpus (at 100 TB, the dominant cost). This plain form
-# routes through the materialized signature TABLE (signatures.py): first
-# call per corpus pays one tokenize pass + a parquet write, every later
-# call scans the narrow shingle table from disk — deterministic cost, no
-# session-cache residency. The REGISTERED form is d7b below (same rows,
-# doc_id-bucketed mirror).
-def d7_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deed_ocr_spark.signatures import (
-        SHINGLES,
-        ensure_signature_table,
-        read_signature_table,
-    )
-
-    path = ensure_signature_table(spark, sf_dir, SHINGLES)
-    return ngram_jaccard_pairs_from(read_signature_table(spark, path))
-
-
+# Both inputs are materialized signature tables (signatures.py): the
+# shingle rows and the bands they derive to are computed once per corpus
+# and scanned from disk — deterministic cost, no session-cache residency.
 def ngram_jaccard_pairs_from(
     toks_src: DataFrame,
+    cand: DataFrame,
+    cand_docs: DataFrame,
     threshold: float = 0.5,
-    cand: DataFrame | None = None,
-    cand_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Jaccard near-dup pairs from an existing (doc_id, sh) shingle table —
-    the composed query (d7) passes the persisted subtree; a multi-query
-    pipeline passes a materialized signatures table (signatures.py).
+    """Jaccard near-dup pairs from a (doc_id, sh) shingle table, the LSH
+    candidate pairs ``cand`` and their distinct doc ids ``cand_docs``.
 
-    ``cand`` optionally supplies the LSH candidate pairs from elsewhere —
-    the registered d7b passes the band-bucketed BANDS mirror's pairs (d9's
-    registered subtree), which drops the in-plan MinHash re-derivation:
-    without it the band self-join recomputes the 4-seed md5 signature
-    aggregation over every shingle row TWICE (once per join side). The
+    d7 passes the band-bucketed BANDS mirror's pairs (d9's registered
+    subtree) and derives ``cand_docs`` from the same mirror
+    (_band_cand_docs — one band-subtree pass; deriving it from ``cand``
+    would re-evaluate the candidate subtree for each union side). The
     bands family derives from the same shingle rows, so the candidate set
-    is identical (d9/d9b identity is pytest-locked).
+    is the oracle's.
 
     Intersection shape (round-7 optimization): the old form joined the
     full shingle relation twice per pair — cand ⋈ toks(doc_a) ⋈
@@ -392,18 +357,6 @@ def ngram_jaccard_pairs_from(
     that density the old full-relation join shape is the economics
     anyway; a size-aware route switch is recorded as future work in
     OPTIMIZATION_r07.md."""
-    if cand is None:
-        cand = _band_pairs_from(_minhash_sig_from(toks_src))
-    if cand_docs is None:
-        # ``cand_docs`` may be supplied independently (d7b derives it from
-        # the bands mirror via _band_cand_docs — one band-subtree pass);
-        # deriving it from ``cand`` here re-evaluates the candidate
-        # subtree for each union side
-        cand_docs = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
     sets = (
         toks_src.select("doc_id", "sh")
         .join(F.broadcast(cand_docs), "doc_id", "semi")
@@ -676,26 +629,6 @@ def winnow_dup_pairs_from(
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-
-
-def d13_winnow_dup_pairs(
-    spark: SparkSession, sf_dir: str, min_shared: int = 1, max_df: int = 64
-) -> DataFrame:
-    # the fingerprint table feeds both the df-count and the self-join —
-    # this plain form reads the materialized fingerprint TABLE
-    # (signatures.py): the winnowing kernel runs once per corpus (at first
-    # materialization), and both consumers scan narrow parquet from disk
-    # instead of depending on session-cache residency. The REGISTERED
-    # form is d13b below (same rows, fp-bucketed mirror).
-    from deed_ocr_spark.signatures import (
-        WINNOW_FPS,
-        ensure_signature_table,
-        read_signature_table,
-    )
-
-    path = ensure_signature_table(spark, sf_dir, WINNOW_FPS)
-    fps = read_signature_table(spark, path).select("doc_id", "fp")
-    return winnow_dup_pairs_from(fps, min_shared=min_shared, max_df=max_df)
 
 
 def _pairs_over(rows: DataFrame, fp_keep: DataFrame) -> DataFrame:
@@ -977,10 +910,9 @@ def d14_training_keeplist(
     lang = d3_lang_id(spark, sf_dir).select("doc_id", "guess_en")
     qual = d4_quality_score(spark, sf_dir).select("doc_id", "mean_token_len")
     keepers = d1_dedup_exact(spark, sf_dir).select(F.col("keeper").alias("doc_id"))
-    # the near-dup anti-join side comes from the band-bucketed mirror
-    # (round 7): identical pairs to the plain d9 (pytest-locked), but the
-    # composed plan no longer re-tokenizes and re-MinHashes the corpus a
-    # second time just to name the docs to drop
+    # the near-dup anti-join side is d9's pair set from the band-bucketed
+    # mirror: the composed plan never re-tokenizes and re-MinHashes the
+    # corpus a second time just to name the docs to drop
     dup_b = (
         d9b_minhash_band_pairs_bucketed(spark, sf_dir)
         .select(F.col("doc_b").alias("doc_id"))
@@ -999,6 +931,112 @@ def d14_training_keeplist(
     )
 
 
+# --- D13: winnowing dup pairs from the fp-bucketed fingerprint mirror --------
+# Every fp-clustered step — distinct, df count, df-cap filter, pair
+# expansion — rides bucket co-location instead of shuffling. The only
+# exchange left in the plan is the final (doc_a, doc_b) aggregation, whose
+# key genuinely differs from fp.
+def d13b_winnow_dup_pairs_bucketed(
+    spark: SparkSession,
+    sf_dir: str,
+    min_shared: int = 1,
+    max_df: int = 64,
+) -> DataFrame:
+    from deed_ocr_spark.signatures import (
+        WINNOW_FPS,
+        ensure_bucketed_signature_table,
+    )
+
+    name = ensure_bucketed_signature_table(spark, sf_dir, WINNOW_FPS, key="fp")
+    fps = spark.table(name).select("doc_id", "fp")
+    return winnow_dup_pairs_from(fps, min_shared=min_shared, max_df=max_df)
+
+
+# --- D9: band pairs from the band-bucketed bands mirror ----------------------
+# Same shape as d13: the per-band grouping rides bucket co-location; the
+# only exchange left is the final (doc_a, doc_b) distinct (plan-locked in
+# tests/test_bucketed_signatures.py).
+def d9b_minhash_band_pairs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from deed_ocr_spark.signatures import (
+        BANDS,
+        ensure_bucketed_signature_table,
+    )
+
+    name = ensure_bucketed_signature_table(spark, sf_dir, BANDS, key="band")
+    return _band_pairs_of(spark.table(name).select("doc_id", "band"))
+
+
+# --- D8: MinHash signatures from the doc_id-bucketed shingles mirror ---------
+# The 4-seed md5 signature over the materialized shingle rows — the
+# shingles family IS the tokenize-and-explode pass, durable — and the
+# per-doc min-aggregation rides the doc_id bucketing with zero exchanges.
+# Measured at sf1.0: 0.40 s → 0.12 s against re-tokenizing the corpus in
+# the plan, identical rows.
+def d8b_minhash_sig_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from deed_ocr_spark.signatures import (
+        SHINGLES,
+        ensure_bucketed_signature_table,
+    )
+
+    name = ensure_bucketed_signature_table(spark, sf_dir, SHINGLES, key="doc_id")
+    return _minhash_sig_from(spark.table(name).select("doc_id", "sh"))
+
+
+# --- D7: Jaccard pipeline from the doc_id-bucketed shingles mirror -----------
+# d7's pipeline mixes keys, so unlike d13/d9 it cannot go down to one
+# Exchange — the pair expansion and the intersection joins genuinely
+# shuffle. The doc_id-clustered steps ride a bucketBy(doc_id) shingles
+# mirror, and the LSH candidates come from the band-bucketed BANDS mirror
+# (d9's subtree) instead of re-deriving the MinHash signatures from
+# shingles inside the plan — the bands family IS that derivation,
+# materialized once per corpus. Measured at sf1.0: 2.2 s → 1.3 s,
+# identical pairs.
+def d7b_ngram_jaccard_pairs_bucketed(
+    spark: SparkSession,
+    sf_dir: str,
+    threshold: float = 0.5,
+) -> DataFrame:
+    from deed_ocr_spark.signatures import (
+        BANDS,
+        SHINGLES,
+        ensure_bucketed_signature_table,
+    )
+
+    # d7 reads TWO independently-versioned mirrors (shingles for the
+    # intersection, bands for the candidates). A corpus append landing
+    # between the two ensure calls would hand back mirrors of different
+    # corpus snapshots — candidate docs with no shingle rows silently
+    # drop pairs instead of raising. Re-resolving the first mirror after
+    # the second pins a consistent snapshot: the name is state-keyed
+    # (version + add dirs), so any interleaved append changes it.
+    for _ in range(4):
+        name = ensure_bucketed_signature_table(
+            spark, sf_dir, SHINGLES, key="doc_id"
+        )
+        bands_t = ensure_bucketed_signature_table(
+            spark, sf_dir, BANDS, key="band"
+        )
+        if (
+            ensure_bucketed_signature_table(
+                spark, sf_dir, SHINGLES, key="doc_id"
+            )
+            == name
+        ):
+            break
+    else:  # pragma: no cover — requires 4 interleaved appends
+        raise RuntimeError(
+            "could not pin a consistent shingles/bands mirror pair "
+            "(concurrent append storm) — retry once the appends settle"
+        )
+    bands = spark.table(bands_t).select("doc_id", "band")
+    return ngram_jaccard_pairs_from(
+        spark.table(name).select("doc_id", "sh"),
+        cand=_band_pairs_of(bands),
+        cand_docs=_band_cand_docs(bands),
+        threshold=threshold,
+    )
+
+
 # NOT registered (50-row driver cap): d12_winnow_fingerprints — the
 # winnowing kernel runs inside registered d13 every round and d12's own
 # output is naive-reference cross-checked in tests/test_fingerprint.py —
@@ -1008,7 +1046,7 @@ def d14_training_keeplist(
 # (components.py).
 QUERIES = {
     "d14_training_keeplist": d14_training_keeplist,
-    "d13_winnow_dup_pairs": d13_winnow_dup_pairs,
+    "d13_winnow_dup_pairs": d13b_winnow_dup_pairs_bucketed,
     "d11_bpe_token_count": d11_bpe_token_count,
     "d1_dedup_exact": d1_dedup_exact,
     "d2_token_count": d2_token_count,
@@ -1016,142 +1054,7 @@ QUERIES = {
     "d4_quality_score": d4_quality_score,
     "d5_fingerprint": d5_fingerprint,
     "d6_simhash": d6_simhash,
-    "d7_ngram_jaccard_pairs": d7_ngram_jaccard_pairs,
-    "d8_minhash_sig": d8_minhash_sig,
-    "d9_minhash_band_pairs": d9_minhash_band_pairs,
+    "d7_ngram_jaccard_pairs": d7b_ngram_jaccard_pairs_bucketed,
+    "d8_minhash_sig": d8b_minhash_sig_bucketed,
+    "d9_minhash_band_pairs": d9b_minhash_band_pairs_bucketed,
 }
-
-
-# --- D13b: the bucketed-table self-join (exchange-free dedup shape) -----------
-# The REGISTERED form of d13 (same name, identical rows — identity
-# pytest-locked against the plain route above): every fp-clustered step —
-# distinct, df count, df-cap join, self-join — rides bucket co-location
-# instead of shuffling. The only exchange left in the plan is the final
-# (doc_a, doc_b) aggregation, whose key genuinely differs from fp.
-def d13b_winnow_dup_pairs_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    min_shared: int = 1,
-    max_df: int = 64,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    from deed_ocr_spark.signatures import (
-        WINNOW_FPS,
-        ensure_bucketed_signature_table,
-    )
-
-    name = ensure_bucketed_signature_table(
-        spark, sf_dir, WINNOW_FPS, key="fp", n_buckets=n_buckets
-    )
-    fps = spark.table(name).select("doc_id", "fp")
-    return winnow_dup_pairs_from(fps, min_shared=min_shared, max_df=max_df)
-
-
-# --- D9b: band self-join from the bucketed bands table ------------------------
-# Same shape as d13b: the band equi-join rides bucket co-location; the only
-# exchange left is the final (doc_a, doc_b) distinct. The REGISTERED form
-# of d9 (row identity with the plain route + one-Exchange plan assertion,
-# both pytest-locked).
-def d9b_minhash_band_pairs_bucketed(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None = None
-) -> DataFrame:
-    from deed_ocr_spark.signatures import (
-        BANDS,
-        ensure_bucketed_signature_table,
-    )
-
-    name = ensure_bucketed_signature_table(
-        spark, sf_dir, BANDS, key="band", n_buckets=n_buckets
-    )
-    return _band_pairs_of(spark.table(name).select("doc_id", "band"))
-
-
-# --- D8b: MinHash signatures from the doc_id-bucketed shingles table ----------
-# Same 4-seed md5 signature as d8 over the SAME shingle rows — but read
-# from the materialized shingles mirror instead of re-tokenizing and
-# re-exploding the corpus inside the plan (the shingles family IS that
-# explode, durable; d7/d13 consume their families the same way), and the
-# per-doc min-aggregation rides the doc_id bucketing with zero exchanges.
-# Measured at sf1.0: 0.40 s → 0.12 s, identical rows (pytest-locked).
-# The REGISTERED form of d8.
-def d8b_minhash_sig_bucketed(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None = None
-) -> DataFrame:
-    from deed_ocr_spark.signatures import (
-        SHINGLES,
-        ensure_bucketed_signature_table,
-    )
-
-    name = ensure_bucketed_signature_table(
-        spark, sf_dir, SHINGLES, key="doc_id", n_buckets=n_buckets
-    )
-    return _minhash_sig_from(spark.table(name).select("doc_id", "sh"))
-
-
-# --- D7b: Jaccard pipeline from the doc_id-bucketed shingles table ------------
-# d7's pipeline mixes keys, so unlike d13b/d9b it cannot go down to one
-# Exchange — the pair expansion and the (doc_b, tok) intersection join
-# genuinely shuffle. The doc_id-clustered steps (size agg, the bucketed
-# side of both intersection joins) ride a bucketBy(doc_id) shingles
-# mirror, and since round 7 the LSH candidates come from the band-bucketed
-# BANDS mirror (d9's registered subtree) instead of re-deriving the
-# MinHash signatures from shingles inside the plan — the bands family IS
-# that derivation, materialized once per corpus. Measured at sf1.0:
-# 2.2 s → 1.3 s, identical pairs. The REGISTERED form of d7.
-def d7b_ngram_jaccard_pairs_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.5,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    from deed_ocr_spark.signatures import (
-        SHINGLES,
-        ensure_bucketed_signature_table,
-    )
-
-    from deed_ocr_spark.signatures import BANDS
-
-    # d7b reads TWO independently-versioned mirrors (shingles for the
-    # intersection, bands for the candidates). A corpus append landing
-    # between the two ensure calls would hand back mirrors of different
-    # corpus snapshots — candidate docs with no shingle rows silently
-    # drop pairs instead of raising. Re-resolving the first mirror after
-    # the second pins a consistent snapshot: the name is state-keyed
-    # (version + add dirs), so any interleaved append changes it.
-    for _ in range(4):
-        name = ensure_bucketed_signature_table(
-            spark, sf_dir, SHINGLES, key="doc_id", n_buckets=n_buckets
-        )
-        bands_t = ensure_bucketed_signature_table(
-            spark, sf_dir, BANDS, key="band", n_buckets=n_buckets
-        )
-        if (
-            ensure_bucketed_signature_table(
-                spark, sf_dir, SHINGLES, key="doc_id", n_buckets=n_buckets
-            )
-            == name
-        ):
-            break
-    else:  # pragma: no cover — requires 4 interleaved appends
-        raise RuntimeError(
-            "could not pin a consistent shingles/bands mirror pair "
-            "(concurrent append storm) — retry or run the plain d7"
-        )
-    bands = spark.table(bands_t).select("doc_id", "band")
-    return ngram_jaccard_pairs_from(
-        spark.table(name).select("doc_id", "sh"),
-        threshold=threshold,
-        cand=_band_pairs_of(bands),
-        cand_docs=_band_cand_docs(bands),
-    )
-
-
-# The bucketed forms are the registered implementations: same names, same
-# rows (identity pytest-locked in tests/test_bucketed_signatures.py), but
-# every fp/band/doc_id-clustered step rides bucket co-location instead of
-# shuffling the signature table. The plain forms above remain the portable
-# baselines the identity tests and the DuckDB oracles were written against.
-QUERIES["d13_winnow_dup_pairs"] = d13b_winnow_dup_pairs_bucketed
-QUERIES["d9_minhash_band_pairs"] = d9b_minhash_band_pairs_bucketed
-QUERIES["d7_ngram_jaccard_pairs"] = d7b_ngram_jaccard_pairs_bucketed
-QUERIES["d8_minhash_sig"] = d8b_minhash_sig_bucketed

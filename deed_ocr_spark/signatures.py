@@ -41,6 +41,7 @@ import hashlib
 import json
 import math
 import os
+import re
 import shutil
 import stat as stat_mod
 import time
@@ -50,10 +51,10 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deed_ocr_spark.queries.common import rebalanced
 from deed_ocr_spark.queries.textpipe import _band_rows, _minhash_sig_from
 
 SHINGLES = "shingles"
-MINHASH_SIGS = "minhash_sigs"
 WINNOW_FPS = "winnow_fps"
 BANDS = "bands"
 
@@ -110,12 +111,7 @@ def read_partitioned_table(
     the partition column then prunes whole directories at planning time
     (``PartitionFilters`` in the scan) instead of relying on row-group
     stats."""
-    roots = [table_dir] + [
-        os.path.join(table_dir, n)
-        for n in sorted(os.listdir(table_dir))
-        if n.startswith("add-")
-        and os.path.isdir(os.path.join(table_dir, n))
-    ]
+    roots = [table_dir] + [p for p, _parts in _add_dirs(table_dir)]
     frames = []
     for root in roots:
         globs = [
@@ -171,12 +167,26 @@ def _docs_parquet_path(sf_dir: str) -> str:
     return os.path.join(os.path.realpath(sf_dir), "documents.parquet")
 
 
-def _gc_stale_algo_versions(family_dir: str, family: str) -> None:
-    """Reclaim sibling family dirs built by an OLDER algo version of the
-    same family under the same corpus key — a full signature-table copy
-    (plus retained versions and bucketed mirrors) that nothing will ever
-    resolve again once FAMILY_ALGO_VERSION moved past it. Best-effort and
-    cheap (one listdir; no-op when no stale dir exists). Each old dir is
+# A family tag carries its algorithm version as a suffix: ``<family>.a<N>``
+# for the base families (no suffix = version 1, see family_dir_for) and
+# ``winnow_pairs-df<D>-fa<N>`` for the durable pairs table.
+_ALGO_SUFFIX = re.compile(r"(.+?)(?:\.a|-fa)(\d+)")
+
+
+def _algo_version(tag: str) -> tuple:
+    """(stem, algo version) of a family tag."""
+    m = _ALGO_SUFFIX.fullmatch(tag)
+    return (m.group(1), int(m.group(2))) if m else (tag, 1)
+
+
+def _gc_stale_algo_versions(family_dir: str) -> None:
+    """Reclaim sibling family dirs of the same stem built by an OLDER
+    algo version under the same corpus key — a full table copy (plus
+    retained versions and bucketed mirrors) that nothing will ever
+    resolve again once FAMILY_ALGO_VERSION moved past it. Serves the base
+    families and the durable pairs table alike: a pairs table of another
+    ``max_df`` has another stem and is left alone. Best-effort and cheap
+    (one listdir; no-op when no stale dir exists). Each old dir is
     reclaimed only under ITS OWN maintenance lock (short timeout, skip on
     contention): during a mixed-version rollout an old-code maintainer
     may be mid-build in that dir, and an unlocked rmtree would both kill
@@ -184,23 +194,15 @@ def _gc_stale_algo_versions(family_dir: str, family: str) -> None:
     maintainers into the recreated dir (round-5 ADVICE). Caveat: an
     old-code READER of the reclaimed dir still rebuilds — acceptable for
     a cache."""
-    cur_ver = FAMILY_ALGO_VERSION.get(family, 1)
+    stem, cur_ver = _algo_version(os.path.basename(family_dir))
     parent = os.path.dirname(family_dir)
     try:
         names = os.listdir(parent)
     except FileNotFoundError:
         return
     for n in names:
-        if n == family:
-            ver = 1
-        elif n.startswith(f"{family}.a"):
-            try:
-                ver = int(n[len(family) + 2 :])
-            except ValueError:
-                continue
-        else:
-            continue
-        if ver < cur_ver:
+        n_stem, ver = _algo_version(n)
+        if n_stem == stem and ver < cur_ver:
             old_dir = os.path.join(parent, n)
             try:
                 with _maintenance_lock(old_dir, timeout=1.0):
@@ -250,20 +252,11 @@ def _family_df_of(docs: DataFrame, family: str) -> DataFrame:
 
     if family == SHINGLES:
         return shingle_rows_of(docs)
-    if family == MINHASH_SIGS:
-        return _minhash_sig_from(shingle_rows_of(docs))
     if family == BANDS:
         return _band_rows(_minhash_sig_from(shingle_rows_of(docs)))
     if family == WINNOW_FPS:
         return winnow_fingerprints_of(docs)
     raise ValueError(f"unknown signature family: {family!r}")
-
-
-def _rebalanced(spark: SparkSession, docs: DataFrame, n_files: int) -> DataFrame:
-    par = spark.sparkContext.defaultParallelism
-    if n_files < par:
-        docs = docs.repartition(par, "doc_id")
-    return docs
 
 
 # --- advisory maintenance lock ------------------------------------------------
@@ -475,15 +468,14 @@ def _next_version_name(family_dir: str, listing: dict) -> str:
     return f"v-{(max(gens) + 1 if gens else 1):06d}-{token}"
 
 
-def _gc_versions(family_dir: str) -> None:
-    """Keep the current version plus its immediate predecessor (readers
-    that planned before the swap keep a stable snapshot); drop older."""
-    names = _version_names(family_dir)
-    cur = _current_version_dir(family_dir)
-    cur_name = os.path.basename(cur) if cur else None
-    keep = {cur_name} if cur_name else set()
-    older = [n for n in names if n not in keep]
-    for n in older[:-1]:  # newest non-current survives one more cycle
+def _gc_superseded(family_dir: str, names: List[str], current: str) -> None:
+    """Keep ``current`` plus the newest of the other ``names`` (ordered
+    oldest first) and drop the rest: a reader that planned against the
+    immediate predecessor before the swap keeps a stable snapshot for one
+    more cycle. Serves both table versions (``v-*``) and bucketed-mirror
+    generations (``bucketed-*``)."""
+    older = [n for n in names if n != current]
+    for n in older[:-1]:
         shutil.rmtree(os.path.join(family_dir, n), ignore_errors=True)
 
 
@@ -506,6 +498,24 @@ def _write_manifest(version_dir: str, listing: dict) -> None:
     os.replace(tmp, _manifest_path(version_dir))
 
 
+def _add_dirs(version_dir: str) -> List[tuple]:
+    """``[(path, parts)]`` of the version's committed add-* dirs, in name
+    order, each with its own part record. A dir whose record cannot be
+    read is torn and skipped (its rows are invisible to every consumer
+    that goes through here)."""
+    adds = []
+    for name in sorted(os.listdir(version_dir)):
+        if not name.startswith("add-"):
+            continue
+        path = os.path.join(version_dir, name)
+        try:
+            with open(os.path.join(path, "_parts.json")) as f:
+                adds.append((path, dict(json.load(f))))
+        except (OSError, ValueError):  # pragma: no cover — torn add dir
+            continue
+    return adds
+
+
 def _processed_parts(version_dir: str, manifest: dict) -> dict:
     """The parts whose signatures are actually ON DISK: the manifest plus
     every committed add-directory's own part record. An add-dir that landed
@@ -514,24 +524,14 @@ def _processed_parts(version_dir: str, manifest: dict) -> dict:
     recomputes a part that is already present (which would duplicate
     rows)."""
     parts = dict(manifest or {})
-    for name in os.listdir(version_dir):
-        if not name.startswith("add-"):
-            continue
-        try:
-            with open(os.path.join(version_dir, name, "_parts.json")) as f:
-                parts.update(json.load(f))
-        except (OSError, ValueError):  # pragma: no cover — torn add dir
-            continue
+    for _path, rec in _add_dirs(version_dir):
+        parts.update(rec)
     return parts
 
 
 def _write_parts_record(dir_path: str, parts: dict) -> None:
     with open(os.path.join(dir_path, "_parts.json"), "w") as f:
         json.dump(parts, f, sort_keys=True)
-
-
-def _add_dir_count(version_dir: str) -> int:
-    return sum(1 for n in os.listdir(version_dir) if n.startswith("add-"))
 
 
 def _parquet_sizes(version_dir: str) -> List[int]:
@@ -566,7 +566,7 @@ def _write_version(
     _write_manifest(tmp, listing)
     os.rename(tmp, vdir)
     _set_current(family_dir, vname)
-    _gc_versions(family_dir)
+    _gc_superseded(family_dir, _version_names(family_dir), vname)
     return vdir
 
 
@@ -590,7 +590,7 @@ def ensure_table(
     append path sound).
 
     States (all maintenance serialized under the advisory lock; the
-    current-table fast path is lock-free):
+    current-table fast path is lock-free — see _ensure_current):
 
     * manifest == listing → current, return it;
     * listing adds NEW parts, old parts untouched → APPEND one add-* dir
@@ -602,13 +602,46 @@ def ensure_table(
       version, _CURRENT swapped atomically.
     """
     listing_fn = listing if callable(listing) else (lambda: listing)
-    cur = _current_version_dir(family_dir)
-    if cur is not None and _read_manifest(cur) == listing_fn():
-        if _add_dir_count(cur) < SIG_COMPACT_AFTER:
+
+    def update(cur: Optional[str], listing: dict) -> str:
+        return _append_or_rebuild(
+            spark, family_dir, cur, listing, build_df, partition_by
+        )
+
+    return _ensure_current(family_dir, listing_fn, update)
+
+
+def _ensure_current(
+    family_dir: str,
+    listing_fn: Callable[[], dict],
+    update: Callable[[Optional[str], dict], str],
+) -> str:
+    """The maintenance prologue every versioned table shares: a lock-free
+    fast path, then the maintenance lock, crashed-tmp GC and a re-check
+    under the lock (another maintainer may have finished the work while
+    we waited). A version is current when its manifest equals the listing
+    and it carries fewer than SIG_COMPACT_AFTER add dirs. Otherwise
+    ``update(current version or None, listing)`` runs under the lock and
+    returns the new current version."""
+
+    def current(listing: dict) -> Optional[str]:
+        cur = _current_version_dir(family_dir)
+        if (
+            cur is not None
+            and _read_manifest(cur) == listing
+            and len(_add_dirs(cur)) < SIG_COMPACT_AFTER
+        ):
             return cur
+        return None
+
+    cur = current(listing_fn())
+    if cur is not None:
+        return cur
     with _maintenance_lock(family_dir):
-        return _maintain_locked(
-            spark, family_dir, listing_fn(), build_df, partition_by
+        _gc_crashed_tmp(family_dir)
+        listing = listing_fn()
+        return current(listing) or update(
+            _current_version_dir(family_dir), listing
         )
 
 
@@ -668,92 +701,82 @@ def _gc_crashed_tmp(family_dir: str) -> None:
                             pass
 
 
-def _maintain_locked(
+def _append_or_rebuild(
     spark: SparkSession,
     family_dir: str,
+    cur: Optional[str],
     listing: dict,
     build_df: Callable[[List[str]], DataFrame],
     partition_by: Optional[List[str]] = None,
 ) -> str:
-    _gc_crashed_tmp(family_dir)
-    cur = _current_version_dir(family_dir)
-    if cur is not None and _read_manifest(cur) == listing:
-        # another maintainer finished the work while we waited on the lock
-        if _add_dir_count(cur) >= SIG_COMPACT_AFTER:
-            return _compact_locked(
-                spark, family_dir, cur, partition_by=partition_by
-            )
-        return cur
-
-    if cur is not None:
-        processed = _processed_parts(cur, _read_manifest(cur))
-        if processed == listing:
-            # crash landed the data, only the manifest lags
-            _write_manifest(cur, listing)
-            return cur
-        if set(processed) <= set(listing) and all(
-            listing[k] == v for k, v in processed.items()
-        ):
-            # Append = one atomically-renamed SUBDIRECTORY per new-part set
-            # (readers list the version dir recursively). A plain
-            # mode('append') into the version would double-append after a
-            # crash between the write and the manifest update — duplicate
-            # shingle rows silently corrupt d7's Jaccard sizes. The
-            # processed set is derived from the manifest PLUS every
-            # committed add-dir's own _parts.json, so a replay never
-            # recomputes a part already on disk even if more parts have
-            # landed since the crash.
-            new_items = {k: listing[k] for k in listing if k not in processed}
-            new_parts = sorted(new_items)
-            add_dir = os.path.join(
-                cur,
-                "add-"
-                + hashlib.md5("|".join(new_parts).encode()).hexdigest()[:12],
-            )
-            if not os.path.isdir(add_dir):
-                # underscore prefix: a leaked temp dir is invisible to readers
-                tmp = os.path.join(cur, f"_tmp-{os.getpid()}")
-                w = build_df(new_parts).write.mode("overwrite")
-                if partition_by:
-                    w = w.partitionBy(*partition_by)
-                w.parquet(tmp)
-                _write_parts_record(tmp, new_items)
-                try:
-                    os.rename(tmp, add_dir)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    if not os.path.isdir(add_dir):
-                        # surfacing the failure beats recording the parts as
-                        # processed and silently dropping their signatures
-                        raise
-            _write_manifest(cur, listing)
-            if _add_dir_count(cur) >= SIG_COMPACT_AFTER:
-                return _compact_locked(
-                    spark, family_dir, cur, partition_by=partition_by
-                )
-            return cur
-
-    # full (re)build into a fresh version
-    return _write_version(
-        spark, family_dir, listing, build_df(sorted(listing)), partition_by
-    )
+    """ensure_table's locked update of a non-current family: append the
+    new parts (or repair a lagging manifest) and compact once add dirs
+    accumulate, or rebuild from scratch when an old part changed."""
+    manifest = _read_manifest(cur) if cur is not None else None
+    processed = _processed_parts(cur, manifest) if cur is not None else {}
+    if cur is None or not (
+        set(processed) <= set(listing)
+        and all(listing[k] == v for k, v in processed.items())
+    ):
+        # no table yet, or an old part changed or vanished: full rebuild
+        return _write_version(
+            spark, family_dir, listing, build_df(sorted(listing)), partition_by
+        )
+    if processed != listing:
+        # Append = one atomically-renamed SUBDIRECTORY per new-part set
+        # (readers list the version dir recursively). A plain
+        # mode('append') into the version would double-append after a
+        # crash between the write and the manifest update — duplicate
+        # shingle rows silently corrupt d7's Jaccard sizes. The processed
+        # set is derived from the manifest PLUS every committed add-dir's
+        # own _parts.json, so a replay never recomputes a part already on
+        # disk even if more parts have landed since the crash.
+        new_items = {k: listing[k] for k in listing if k not in processed}
+        new_parts = sorted(new_items)
+        add_dir = os.path.join(
+            cur,
+            "add-" + hashlib.md5("|".join(new_parts).encode()).hexdigest()[:12],
+        )
+        if not os.path.isdir(add_dir):
+            # underscore prefix: a leaked temp dir is invisible to readers
+            tmp = os.path.join(cur, f"_tmp-{os.getpid()}")
+            w = build_df(new_parts).write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(tmp)
+            _write_parts_record(tmp, new_items)
+            try:
+                os.rename(tmp, add_dir)
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)
+                if not os.path.isdir(add_dir):
+                    # surfacing the failure beats recording the parts as
+                    # processed and silently dropping their signatures
+                    raise
+    if manifest != listing:
+        # after an append, or when a crash landed the data and only the
+        # manifest lags
+        _write_manifest(cur, listing)
+    if len(_add_dirs(cur)) >= SIG_COMPACT_AFTER:
+        return _compact_locked(spark, family_dir, cur, partition_by)
+    return cur
 
 
 def _compact_locked(
     spark: SparkSession,
     family_dir: str,
     version_dir: str,
-    target_bytes: int = SIG_TARGET_FILE_BYTES,
     partition_by: Optional[List[str]] = None,
 ) -> str:
     """Fold a version's accumulated add-* dirs into one consolidated
     version: READS the existing rows back (coalesce — narrow, no shuffle,
-    no recompute) binpacked to ceil(bytes/target) files, carries the
-    processed-parts map forward as the new manifest, swaps _CURRENT. The
-    rewrite_data_files analog of compact.py, applied to signature tables."""
+    no recompute) binpacked to ceil(bytes/SIG_TARGET_FILE_BYTES) files,
+    carries the processed-parts map forward as the new manifest, swaps
+    _CURRENT. The rewrite_data_files analog of compact.py, applied to
+    signature tables."""
     manifest = _processed_parts(version_dir, _read_manifest(version_dir))
     sizes = _parquet_sizes(version_dir)
-    target_files = max(1, math.ceil(sum(sizes) / target_bytes))
+    target_files = max(1, math.ceil(sum(sizes) / SIG_TARGET_FILE_BYTES))
     if partition_by:
         # coalesce + partitionBy would write one file PER PARTITION VALUE
         # per task (a task holds rows of many chunks), multiplying the
@@ -766,35 +789,6 @@ def _compact_locked(
     else:
         df = read_signature_table(spark, version_dir).coalesce(target_files)
     return _write_version(spark, family_dir, manifest, df, partition_by)
-
-
-def compact_signature_table(
-    spark: SparkSession,
-    family_dir: str,
-    target_bytes: int = SIG_TARGET_FILE_BYTES,
-    min_files: int = 2,
-    partition_by: Optional[List[str]] = None,
-) -> str:
-    """Explicit maintenance entry point: consolidate the family's current
-    version if it is over-fragmented (more parquet files than its bytes
-    need, or any accumulated add dirs); no-op otherwise. Returns the
-    current version path either way; idempotent. For a hive-partitioned
-    family (e.g. media), pass the SAME partition_by it was built with —
-    compacting it unpartitioned would silently drop the partition
-    column."""
-    with _maintenance_lock(family_dir):
-        cur = _current_version_dir(family_dir)
-        if cur is None:
-            raise FileNotFoundError(f"no current version under {family_dir}")
-        sizes = _parquet_sizes(cur)
-        target_files = max(1, math.ceil(sum(sizes) / target_bytes))
-        if _add_dir_count(cur) == 0 and (
-            len(sizes) < min_files or len(sizes) <= target_files
-        ):
-            return cur
-        return _compact_locked(
-            spark, family_dir, cur, target_bytes, partition_by
-        )
 
 
 def ensure_signature_table(
@@ -818,14 +812,14 @@ def ensure_signature_table(
     docs_path = _docs_parquet_path(sf_dir)
     listing = _corpus_listing(sf_dir)
     family_dir = family_dir_for(docs_path, family)
-    _gc_stale_algo_versions(family_dir, family)
+    _gc_stale_algo_versions(family_dir)
 
     def build(parts: List[str]) -> DataFrame:
         if os.path.isdir(docs_path):
             paths = [os.path.join(docs_path, n) for n in parts]
         else:
             paths = [docs_path]
-        docs = _rebalanced(spark, spark.read.parquet(*paths), len(paths))
+        docs = rebalanced(spark.read.parquet(*paths), "doc_id")
         return _family_df_of(docs, family)
 
     return ensure_table(spark, family_dir, listing, build)
@@ -859,30 +853,11 @@ def _size_bytes(v) -> int:
         return 10 << 20
 
 
-def _version_base_paths(version_dir: str):
-    """(base_paths, add_dirs): the version's root parquet files (the full
-    build / last compaction) and its committed add-* dirs with their part
-    records."""
-    base, adds = [], []
-    for name in sorted(os.listdir(version_dir)):
-        p = os.path.join(version_dir, name)
-        if name.startswith("add-") and os.path.isdir(p):
-            try:
-                with open(os.path.join(p, "_parts.json")) as f:
-                    adds.append((p, dict(json.load(f))))
-            except (OSError, ValueError):  # torn add dir — invisible rows
-                continue
-        elif name.endswith(".parquet") and not name.startswith(("_", ".")):
-            base.append(p)
-    return base, adds
-
-
 def winnow_dup_pairs_delta(
     spark: SparkSession,
     sf_dir: str,
     since: dict,
     max_df: int = 64,
-    route: str = "auto",
     window: Optional[dict] = None,
 ):
     """(added, retracted) dup-pair delta since the ``since`` snapshot
@@ -893,18 +868,19 @@ def winnow_dup_pairs_delta(
     queries.textpipe.winnow_pair_delta for the df-cap retraction
     semantics and the equality contract.
 
-    ``route`` picks the corpus-side reduction strategy:
-    * ``"broadcast"`` — hash the new docs' fp set and scan the old rows
-      map-side (the "new is small" regime; zero shuffle of the corpus).
-    * ``"mirror"`` — run every corpus-side reduction as a
-      storage-partitioned join against the fp-bucketed catalog mirror
-      (ensure_bucketed_signature_table): the big side is neither
-      broadcast-hashed against nor exchanged, so a mid-size append whose
-      fp set exceeds the broadcast budget still never re-shuffles the
-      corpus table (round-5 VERDICT #3).
-    * ``"auto"`` — mirror when the new add-dirs' bytes exceed the
-      session's autoBroadcastJoinThreshold (a conservative proxy: the
-      distinct-fp column is a fraction of file bytes), else broadcast.
+    The corpus-side reduction takes one of two routes, chosen from the
+    new add-dirs' bytes against the session's autoBroadcastJoinThreshold
+    (a conservative proxy: the distinct-fp column is a fraction of file
+    bytes):
+    * within the threshold — hash the new docs' fp set and scan the old
+      rows map-side (the "new is small" regime; zero shuffle of the
+      corpus);
+    * above it, or with broadcasting disabled (-1) — run every
+      corpus-side reduction as a storage-partitioned join against the
+      fp-bucketed catalog mirror (ensure_bucketed_signature_table): the
+      big side is neither broadcast-hashed against nor exchanged, so a
+      mid-size append whose fp set exceeds the broadcast budget still
+      never re-shuffles the corpus table (round-5 VERDICT #3).
 
     Raises ValueError when provenance is insufficient — an old part was
     rewritten (fingerprint mismatch ⇒ the table was REBUILT and rows
@@ -931,7 +907,11 @@ def winnow_dup_pairs_delta(
         # maintenance, the durable pairs table) compare against this to
         # detect a concurrent append widening THEIR window past ours
         window["parts"] = dict(processed)
-    base, adds = _version_base_paths(ver)
+    base = [
+        os.path.join(ver, n)
+        for n in sorted(os.listdir(ver))
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ]
     # Three-way add-dir classification against the [since, processed]
     # window. A dir whose parts are neither all-old nor all-new was
     # committed by a CONCURRENT maintainer after the processed snapshot
@@ -941,7 +921,7 @@ def winnow_dup_pairs_delta(
     # counting them as old baseline would silently drop their pairs from
     # every future delta.
     new_dirs, old_dirs, concurrent_dirs, covered = [], [], [], set()
-    for p, rec in adds:
+    for p, rec in _add_dirs(ver):
         if set(rec) <= new_parts:
             new_dirs.append(p)
             covered |= set(rec)
@@ -971,18 +951,14 @@ def winnow_dup_pairs_delta(
         else spark.read.parquet(*new_dirs).select("doc_id", "fp").limit(0)
     )
     new_rows = spark.read.parquet(*new_dirs).select("doc_id", "fp")
-    if route not in ("auto", "broadcast", "mirror"):
-        raise ValueError(f"unknown pair-delta route {route!r}")
-    use_mirror = route == "mirror"
-    if route == "auto":
-        thresh = _size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-        )
-        new_bytes = sum(sum(_parquet_sizes(d)) for d in new_dirs)
-        # threshold -1 = broadcasting DISABLED by the admin: the mirror is
-        # the only safe route (the broadcast form's explicit hint would
-        # override the disable and ship an arbitrarily large fp set)
-        use_mirror = thresh < 0 or new_bytes > thresh
+    thresh = _size_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
+    )
+    new_bytes = sum(sum(_parquet_sizes(d)) for d in new_dirs)
+    # threshold -1 = broadcasting DISABLED by the admin: the mirror is the
+    # only safe route (the broadcast form's explicit hint would override
+    # the disable and ship an arbitrarily large fp set)
+    use_mirror = thresh < 0 or new_bytes > thresh
     corpus_fps = None
     if use_mirror:
         # The mirror reflects the LIVE table — everything in the current
@@ -1008,7 +984,7 @@ def winnow_dup_pairs_delta(
             if _current_version_dir(os.path.dirname(ver)) != ver:
                 raise FileNotFoundError
             known = set(old_dirs) | set(new_dirs)
-            _b2, adds2 = _version_base_paths(ver)
+            adds2 = _add_dirs(ver)
         except FileNotFoundError:
             raise ValueError(
                 "the fingerprint table was rebuilt while pinning the "
@@ -1033,36 +1009,6 @@ def _pairs_family_tag(max_df: int) -> str:
     fps family itself (family_dir_for only auto-tags the base families)."""
     fps_ver = FAMILY_ALGO_VERSION.get(WINNOW_FPS, 1)
     return f"winnow_pairs-df{max_df}-fa{fps_ver}"
-
-
-def _gc_stale_pairs_versions(family_dir: str, max_df: int) -> None:
-    """Reclaim sibling pairs-family dirs built against an OLDER WINNOW_FPS
-    algo version (the fa<N> suffix of _pairs_family_tag): nothing resolves
-    them again once the fingerprint kernel moved on, and each holds a full
-    pair-table copy. Same locked-rmtree discipline as
-    _gc_stale_algo_versions (which cannot see these — its patterns only
-    match the base families)."""
-    cur_ver = FAMILY_ALGO_VERSION.get(WINNOW_FPS, 1)
-    prefix = f"winnow_pairs-df{max_df}-fa"
-    parent = os.path.dirname(family_dir)
-    try:
-        names = os.listdir(parent)
-    except FileNotFoundError:
-        return
-    for n in names:
-        if not n.startswith(prefix):
-            continue
-        try:
-            ver = int(n[len(prefix):])
-        except ValueError:
-            continue
-        if ver < cur_ver:
-            old_dir = os.path.join(parent, n)
-            try:
-                with _maintenance_lock(old_dir, timeout=1.0):
-                    shutil.rmtree(old_dir, ignore_errors=True)
-            except TimeoutError:  # pragma: no cover — live old maintainer
-                continue
 
 
 def _pairs_full_df(spark: SparkSession, sf_dir: str, max_df: int) -> DataFrame:
@@ -1113,19 +1059,12 @@ def ensure_dup_pairs_table(
     family_dir = family_dir_for(
         _docs_parquet_path(sf_dir), _pairs_family_tag(max_df)
     )
-    _gc_stale_pairs_versions(family_dir, max_df)
-    cur = _current_version_dir(family_dir)
-    if cur is not None and _read_manifest(cur) == fps_snapshot:
-        return cur
-    with _maintenance_lock(family_dir):
-        _gc_crashed_tmp(family_dir)
-        cur = _current_version_dir(family_dir)
+    _gc_stale_algo_versions(family_dir)
+
+    def update(cur: Optional[str], fps_snapshot: dict) -> str:
         old_snap = _read_manifest(cur) if cur is not None else None
-        if old_snap == fps_snapshot:
-            return cur  # another maintainer finished while we waited
         if (
-            cur is not None
-            and old_snap
+            old_snap
             and set(old_snap) < set(fps_snapshot)
             and all(fps_snapshot.get(k) == v for k, v in old_snap.items())
         ):
@@ -1167,9 +1106,7 @@ def ensure_dup_pairs_table(
                         "left_anti",
                     )
                 )
-                return _write_version(
-                    spark, family_dir, fps_snapshot, merged
-                )
+                return _write_version(spark, family_dir, fps_snapshot, merged)
             except ValueError:
                 pass  # provenance insufficient — full recompute below
         return _write_version(
@@ -1178,6 +1115,8 @@ def ensure_dup_pairs_table(
             fps_snapshot,
             _pairs_full_df(spark, sf_dir, max_df),
         )
+
+    return _ensure_current(family_dir, lambda: fps_snapshot, update)
 
 
 # --- bucketed signature tables: the exchange-free self-join shape -------------
@@ -1188,36 +1127,18 @@ def _bucketed_token(version_dir: str, key: str, n_buckets: int) -> str:
     land inside the version dir without changing its path — a mirror built
     before an append must get a new token, or the tableExists fast path
     would keep serving rows that miss the appended documents), and the
-    bucketing spec itself (a caller asking for a different key or bucket
-    count must never be handed the old layout)."""
+    bucketing spec itself (a caller asking for a different key, or a
+    session deriving another bucket count, must never be handed the old
+    layout)."""
     state = {
         "dir": os.path.realpath(version_dir),
         "key": key,
         "n_buckets": n_buckets,
-        "adds": sorted(
-            n for n in os.listdir(version_dir) if n.startswith("add-")
-        ),
+        "adds": [os.path.basename(p) for p, _parts in _add_dirs(version_dir)],
     }
     return hashlib.md5(
         json.dumps(state, sort_keys=True).encode()
     ).hexdigest()[:10]
-
-
-def _gc_bucketed_generations(family_dir: str, current: str) -> None:
-    """Drop bucketed-mirror data dirs older than the immediate
-    predecessor. Mirrors _gc_versions: the newest non-current generation
-    survives one more cycle so a reader that planned against it before
-    the swap keeps a stable snapshot."""
-    others = sorted(
-        (
-            n
-            for n in os.listdir(family_dir)
-            if n.startswith("bucketed-") and n != current
-        ),
-        key=lambda n: os.path.getmtime(os.path.join(family_dir, n)),
-    )
-    for n in others[:-1]:
-        shutil.rmtree(os.path.join(family_dir, n), ignore_errors=True)
 
 
 def auto_signature_buckets(version_dir: str) -> int:
@@ -1257,7 +1178,6 @@ def ensure_bucketed_signature_table(
     sf_dir: str,
     family: str,
     key: str = "fp",
-    n_buckets: Optional[int] = None,
 ) -> str:
     """Materialize ``family`` ALSO as a catalog table bucketed on ``key``
     and return the table name.
@@ -1286,7 +1206,7 @@ def ensure_bucketed_signature_table(
     session (whose in-memory catalog forgot the entry) re-registers the
     existing files via DDL instead of re-running the write — and the
     immediate predecessor generation is retained one cycle for readers
-    that planned before the swap (_gc_bucketed_generations). Creation
+    that planned before the swap (_gc_superseded). Creation
     serializes under the family maintenance lock, and the version handle
     is RE-RESOLVED inside that lock (round-5 ADVICE): while a caller
     waits, the family can be rebuilt — once (the pre-lock handle now
@@ -1305,11 +1225,7 @@ def ensure_bucketed_signature_table(
             return f"sig_{family}_{scope}_{token}"
 
         try:
-            nb = (
-                n_buckets
-                if n_buckets is not None
-                else auto_signature_buckets(version_dir)
-            )
+            nb = auto_signature_buckets(version_dir)
             name = name_for(_bucketed_token(version_dir, key, nb))
         except FileNotFoundError:
             continue  # version GC'd between ensure and token — retry
@@ -1318,18 +1234,14 @@ def ensure_bucketed_signature_table(
         with _maintenance_lock(family_dir):
             # re-resolve + re-derive under the lock: a rebuild swaps
             # _CURRENT and an append changes the add-dir set — either
-            # way the token (and an auto-derived bucket count) must
+            # way the token (and the size-derived bucket count) must
             # describe the state we will mirror
             cur = _current_version_dir(family_dir)
             if cur is None:  # pointer torn/vanished — rebuild outside lock
                 continue
             version_dir = cur
             try:
-                nb = (
-                    n_buckets
-                    if n_buckets is not None
-                    else auto_signature_buckets(version_dir)
-                )
+                nb = auto_signature_buckets(version_dir)
                 token = _bucketed_token(version_dir, key, nb)
             except FileNotFoundError:  # pragma: no cover — raced GC
                 continue
@@ -1365,7 +1277,11 @@ def ensure_bucketed_signature_table(
                     .option("path", data_dir)
                     .saveAsTable(name)
                 )
-            _gc_bucketed_generations(family_dir, f"bucketed-{token}")
+            generations = sorted(
+                (n for n in os.listdir(family_dir) if n.startswith("bucketed-")),
+                key=lambda n: os.path.getmtime(os.path.join(family_dir, n)),
+            )
+            _gc_superseded(family_dir, generations, f"bucketed-{token}")
         return name
     raise RuntimeError(  # pragma: no cover — requires 4 racing rebuilds
         f"bucketed mirror of {family!r} could not pin a stable version "

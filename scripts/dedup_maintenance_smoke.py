@@ -21,9 +21,9 @@ Cycle measured:
                      retracted over the small stored table)
  5. fresh rebuild  — same 110% corpus built from scratch at another path
  6. equality       — incremental table == fresh table (count + aggregate
-                     hash over every column), dup pairs identical through
-                     both the plain and bucketed routes AND the durable
-                     pairs table
+                     hash over every column), dup pairs identical whether
+                     read from the version dir or its bucketed mirror,
+                     AND equal to the durable pairs table
  7. clusters       — connected components over the DURABLE pairs table
                      (graph cost only — no pair re-derivation); planted
                      twins are disjoint, so expected clusters are exact
@@ -49,6 +49,7 @@ import os
 import shutil
 import sys
 import time
+from contextlib import contextmanager
 from typing import Iterator
 
 import numpy as np
@@ -162,6 +163,25 @@ def _table_digest(spark, version_dir: str):
 
 def _pairs_digest(spark, pairs_df):
     return _digest(pairs_df)
+
+
+# winnow_dup_pairs_delta picks its corpus-side reduction from the new
+# add-dirs' bytes against the session's autoBroadcastJoinThreshold: 1g
+# keeps any append this smoke lands (tens of MB at the default 10^6 docs)
+# on the broadcast route; -1 (broadcasting disabled) forces the
+# fp-bucketed mirror route
+ROUTE_THRESHOLDS = {"broadcast": "1g", "mirror": "-1"}
+
+
+@contextmanager
+def _delta_route(spark, route: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, ROUTE_THRESHOLDS[route])
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def main(argv=None):
@@ -309,16 +329,15 @@ def main(argv=None):
     # twins are confined to the appended range, so the expectation is
     # exact: added == the new range's twins, nothing retracted (no
     # df-cap crossing in this collision-free corpus).
-    # route pinned to "broadcast" so pairs_delta_sec keeps the meaning it
-    # had in earlier rounds (the auto route would take the mirror path at
-    # this append size and pay a one-time post-append mirror rebuild
-    # inside the timed window); the mirror route is timed separately
-    # under --routes with that rebuild excluded
+    # route pinned to broadcast so pairs_delta_sec keeps the meaning it
+    # had in earlier rounds (at the session's default threshold this
+    # append size would take the mirror path and pay a one-time
+    # post-append mirror rebuild inside the timed window); the mirror
+    # route is timed separately under --routes with that rebuild excluded
     t0 = time.monotonic()
-    added_df, retracted_df = winnow_dup_pairs_delta(
-        spark, base_dir, snap, route="broadcast"
-    )
-    n_added, n_retracted = added_df.count(), retracted_df.count()
+    with _delta_route(spark, "broadcast"):
+        added_df, retracted_df = winnow_dup_pairs_delta(spark, base_dir, snap)
+        n_added, n_retracted = added_df.count(), retracted_df.count()
     out["pairs_delta_sec"] = round(time.monotonic() - t0, 2)
     out["pairs_added"] = n_added
     out["pairs_retracted"] = n_retracted
@@ -341,10 +360,9 @@ def main(argv=None):
         out["mirror_refresh_sec"] = round(time.monotonic() - t0, 2)
         for route in ("broadcast", "mirror"):
             t0 = time.monotonic()
-            a_r, r_r = winnow_dup_pairs_delta(
-                spark, base_dir, snap, route=route
-            )
-            n_a, n_r = a_r.count(), r_r.count()
+            with _delta_route(spark, route):
+                a_r, r_r = winnow_dup_pairs_delta(spark, base_dir, snap)
+                n_a, n_r = a_r.count(), r_r.count()
             out[f"pairs_delta_{route}_sec"] = round(time.monotonic() - t0, 2)
             out[f"pairs_delta_{route}_ok"] = (n_a, n_r) == (
                 n_added,

@@ -1,23 +1,25 @@
 """Bucketed signature tables: the exchange-free dedup self-join.
 
-d13's pipeline clusters on `fp` four times (distinct, document-frequency
-count, df-cap join, self-join). From a plain parquet signature table each
-step shuffles; from a `bucketBy(fp)` catalog table Spark's subset rule
-(HashPartitioning(fp) satisfies any ClusteredDistribution whose keys
-include fp) makes every one of them exchange-free. These tests lock both
-properties: row identity with the plain d13, and a physical plan whose
-ONLY exchange is the final (doc_a, doc_b) aggregation.
+The registered d7/d8/d9/d13 read signature families through catalog
+mirrors bucketed on the key their pipeline clusters on. From a plain
+parquet signature table every fp-keyed step of d13 (the per-fp doc-set
+aggregation feeding the df cap and the pair expansion) shuffles; from a
+`bucketBy(fp)` table Spark's subset rule (HashPartitioning(fp) satisfies
+any ClusteredDistribution whose keys include fp) makes it exchange-free.
+These tests lock row identity of d13 with the same pipeline composed over
+the plain version dir, and pin each registered plan's absolute Exchange
+count with broadcasting off. Row identity of d7/d8/d9 is the DuckDB
+oracles' job (tests/test_queries_oracle.py).
 """
 
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 import deed_ocr_spark.signatures as sig
 from deed_ocr_spark.queries.textpipe import (
-    d13_winnow_dup_pairs,
     d13b_winnow_dup_pairs_bucketed,
+    winnow_dup_pairs_from,
 )
 
 SF = "/root/testdata/sf0.01"
@@ -35,19 +37,36 @@ def _plan(df) -> str:
     )
 
 
+def _plan_no_broadcast(spark, build) -> str:
+    """Formatted plan of ``build()`` with broadcasting off: at 100 TB
+    neither join side broadcasts, and the exchange counts must hold on the
+    sort-merge path."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        return _plan(build())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def _plain_d13(spark, sf):
+    """d13's pipeline composed over the plain (unbucketed) fingerprint
+    version dir — the reference the bucketed registered form must match."""
+    version = sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
+    return winnow_dup_pairs_from(sig.read_signature_table(spark, version))
+
+
 @pytest.fixture(scope="module")
 def bucketed(spark):
     name = sig.ensure_bucketed_signature_table(
-        spark, SF, sig.WINNOW_FPS, key="fp", n_buckets=8
+        spark, SF, sig.WINNOW_FPS, key="fp"
     )
     yield name
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_bucketed_rows_equal_plain_d13(spark, bucketed):
-    plain = {
-        tuple(r) for r in d13_winnow_dup_pairs(spark, SF).collect()
-    }
+    plain = {tuple(r) for r in _plain_d13(spark, SF).collect()}
     buck = {
         tuple(r)
         for r in d13b_winnow_dup_pairs_bucketed(spark, SF).collect()
@@ -56,14 +75,9 @@ def test_bucketed_rows_equal_plain_d13(spark, bucketed):
 
 
 def test_bucketed_plan_has_single_exchange(spark, bucketed):
-    # broadcast off: at 100 TB neither join side broadcasts, and the
-    # exchange-free claim must hold on the sort-merge path
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(d13b_winnow_dup_pairs_bucketed(spark, SF))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    plan = _plan_no_broadcast(
+        spark, lambda: d13b_winnow_dup_pairs_bucketed(spark, SF)
+    )
     # every fp-clustered step rides the bucketing; the one exchange left
     # is the final (doc_a, doc_b) pair aggregation. Since round 7 the
     # pair expansion is LOCAL (per-fp doc-set arrays, no self-join), so
@@ -76,16 +90,14 @@ def test_bucketed_plan_has_single_exchange(spark, bucketed):
 
 
 def test_plain_plan_shuffles_more(spark, bucketed):
-    """The claim is relative: the plain-table pipeline must carry MORE
-    exchanges than the bucketed one — otherwise the bucketed copy is
-    pointless and this module should be deleted."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(d13_winnow_dup_pairs(spark, SF))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert len(_exchange_ids(plan)) > 1
+    """The claim is relative: the same pipeline over the plain version
+    dir must carry MORE exchanges than the bucketed one — otherwise the
+    bucketed mirror is pointless and this module should be deleted."""
+    plain = _plan_no_broadcast(spark, lambda: _plain_d13(spark, SF))
+    buck = _plan_no_broadcast(
+        spark, lambda: d13b_winnow_dup_pairs_bucketed(spark, SF)
+    )
+    assert len(_exchange_ids(plain)) > len(_exchange_ids(buck)) == 1
 
 
 def test_stale_generation_dropped_on_rebuild(spark, tmp_path, monkeypatch):
@@ -117,30 +129,19 @@ def test_stale_generation_dropped_on_rebuild(spark, tmp_path, monkeypatch):
 
 
 def test_band_pairs_bucketed_rows_and_plan(spark):
-    """d9b: the band self-join from the bucketed bands family — identical
-    rows to d9, and the only Exchange in the plan is the final
-    (doc_a, doc_b) distinct."""
+    """d9 from the bucketed bands family: the only Exchange in the plan is
+    the final (doc_a, doc_b) distinct (rows are checked against the
+    DuckDB oracle in tests/test_queries_oracle.py)."""
     from deed_ocr_spark.queries.textpipe import (
-        d9_minhash_band_pairs,
         d9b_minhash_band_pairs_bucketed,
     )
 
-    name = sig.ensure_bucketed_signature_table(
-        spark, SF, sig.BANDS, key="band", n_buckets=8
-    )
+    name = sig.ensure_bucketed_signature_table(spark, SF, sig.BANDS, key="band")
     try:
-        plain = {tuple(r) for r in d9_minhash_band_pairs(spark, SF).collect()}
-        buck = {
-            tuple(r)
-            for r in d9b_minhash_band_pairs_bucketed(spark, SF).collect()
-        }
-        assert buck == plain and buck
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = _plan(d9b_minhash_band_pairs_bucketed(spark, SF))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        assert d9b_minhash_band_pairs_bucketed(spark, SF).take(1)
+        plan = _plan_no_broadcast(
+            spark, lambda: d9b_minhash_band_pairs_bucketed(spark, SF)
+        )
         assert len(_exchange_ids(plan)) == 1, plan
         # round 7: per-band doc sets expanded locally — join-free plan
         assert "Join" not in plan, plan
@@ -183,7 +184,7 @@ def test_bucketed_name_tracks_appends(spark, tmp_path, monkeypatch):
     rows1 = spark.table(n1).count()
     pq.write_table(slices[1][1], corpus / slices[1][0])
     version_dir = sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
-    assert sig._add_dir_count(version_dir) == 1  # append, not rebuild
+    assert len(sig._add_dirs(version_dir)) == 1  # append, not rebuild
     n2 = n1
     try:
         n2 = sig.ensure_bucketed_signature_table(spark, sf, sig.WINNOW_FPS)
@@ -205,23 +206,29 @@ def test_bucketed_name_tracks_appends(spark, tmp_path, monkeypatch):
 
 
 def test_bucketed_name_tracks_bucketing_spec(spark, tmp_path, monkeypatch):
-    """A caller asking for a different key or bucket count must get a NEW
-    table, never the old layout under the old name."""
+    """A caller asking for a different key, or deriving a different bucket
+    count (another SPARK_GRAFT_BUCKET_MB), must get a NEW table, never the
+    old layout under the old name."""
     import pyarrow.parquet as pq
 
     monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
     corpus, slices = _chunked_corpus(tmp_path, 1)
     pq.write_table(slices[0][1], corpus / slices[0][0])
     sf = str(tmp_path / "sf")
+    version_dir = sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
+    default_nb = sig.auto_signature_buckets(version_dir)
     names = {
         sig.ensure_bucketed_signature_table(spark, sf, sig.WINNOW_FPS, key="fp"),
         sig.ensure_bucketed_signature_table(
             spark, sf, sig.WINNOW_FPS, key="doc_id"
         ),
-        sig.ensure_bucketed_signature_table(
-            spark, sf, sig.WINNOW_FPS, key="fp", n_buckets=4
-        ),
     }
+    # a tiny per-bucket target lifts the size-derived count off its floor
+    monkeypatch.setenv("SPARK_GRAFT_BUCKET_MB", "0.001")
+    assert sig.auto_signature_buckets(version_dir) != default_nb
+    names.add(
+        sig.ensure_bucketed_signature_table(spark, sf, sig.WINNOW_FPS, key="fp")
+    )
     try:
         assert len(names) == 3, names
     finally:
@@ -287,14 +294,9 @@ def test_bucketed_reregister_without_rewrite(spark, tmp_path, monkeypatch):
         assert files_after == files_before, "re-register must not rewrite"
         assert {tuple(r) for r in spark.table(n2).collect()} == rows
         # the DDL-registered table still rides the bucketing
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = _plan(
-                spark.table(n2).groupBy("fp").count()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        plan = _plan_no_broadcast(
+            spark, lambda: spark.table(n2).groupBy("fp").count()
+        )
         assert len(_exchange_ids(plan)) == 0, plan
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {n2}")
@@ -327,66 +329,52 @@ def test_registered_dedup_queries_are_bucketed_forms(spark):
 
 
 def test_minhash_sig_bucketed_rows_and_plan(spark):
-    """d8b: the 4-seed MinHash signatures from the doc_id-bucketed
-    shingles mirror — identical rows to the plain d8 (which re-tokenizes
-    the corpus), and the doc_id aggregation rides the bucketing: zero
-    exchanges."""
-    from deed_ocr_spark.queries.textpipe import (
-        d8_minhash_sig,
-        d8b_minhash_sig_bucketed,
-    )
+    """d8 from the doc_id-bucketed shingles mirror: the per-doc MinHash
+    aggregation rides the bucketing — zero exchanges (rows are checked
+    against the DuckDB oracle in tests/test_queries_oracle.py)."""
+    from deed_ocr_spark.queries.textpipe import d8b_minhash_sig_bucketed
 
     name = sig.ensure_bucketed_signature_table(
-        spark, SF, sig.SHINGLES, key="doc_id", n_buckets=8
+        spark, SF, sig.SHINGLES, key="doc_id"
     )
     try:
-        plain = {tuple(r) for r in d8_minhash_sig(spark, SF).collect()}
-        buck = {
-            tuple(r) for r in d8b_minhash_sig_bucketed(spark, SF).collect()
-        }
-        assert buck == plain and buck
-        plan = _plan(d8b_minhash_sig_bucketed(spark, SF))
+        assert d8b_minhash_sig_bucketed(spark, SF).take(1)
+        plan = _plan_no_broadcast(
+            spark, lambda: d8b_minhash_sig_bucketed(spark, SF)
+        )
         assert len(_exchange_ids(plan)) == 0, plan
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_jaccard_bucketed_rows_and_plan(spark):
-    """d7b: the Jaccard pipeline from a doc_id-bucketed shingles mirror.
-    Mixed keys mean it cannot reach one Exchange (band self-join and the
-    (doc_b, tok) intersection join genuinely shuffle), but every
-    doc_id-clustered step — size agg, MinHash agg, the bucketed side of
-    both intersection joins — must ride the bucketing: strictly fewer
-    exchanges than the plain-table plan, identical rows."""
+    """d7 from the doc_id-bucketed shingles mirror and the band-bucketed
+    bands mirror. Mixed keys mean it cannot reach one Exchange (the
+    candidate pairs and the per-side shingle-set joins genuinely
+    shuffle), but every doc_id-clustered step rides the bucketing: the
+    plan carries exactly 7 exchanges with broadcasting off (two of them
+    the candidate-doc broadcasts the query hints explicitly), the count
+    measured when the plain-table twin it used to be compared against
+    was deleted. Rows are checked against the DuckDB oracle in
+    tests/test_queries_oracle.py."""
     from deed_ocr_spark.queries.textpipe import (
-        d7_ngram_jaccard_pairs,
         d7b_ngram_jaccard_pairs_bucketed,
     )
 
     name = sig.ensure_bucketed_signature_table(
-        spark, SF, sig.SHINGLES, key="doc_id", n_buckets=8
+        spark, SF, sig.SHINGLES, key="doc_id"
     )
     try:
-        plain = {tuple(r) for r in d7_ngram_jaccard_pairs(spark, SF).collect()}
-        buck = {
-            tuple(r)
-            for r in d7b_ngram_jaccard_pairs_bucketed(spark, SF).collect()
-        }
-        assert buck == plain and buck
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan_plain = _plan(d7_ngram_jaccard_pairs(spark, SF))
-            plan_buck = _plan(d7b_ngram_jaccard_pairs_bucketed(spark, SF))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        assert len(_exchange_ids(plan_buck)) < len(_exchange_ids(plan_plain)), (
-            plan_buck
+        assert d7b_ngram_jaccard_pairs_bucketed(spark, SF).take(1)
+        plan = _plan_no_broadcast(
+            spark, lambda: d7b_ngram_jaccard_pairs_bucketed(spark, SF)
         )
+        assert len(_exchange_ids(plan)) == 7, plan
         # still a real-candidate plan: no cartesian, no cache, no
         # re-tokenization of the corpus
-        assert "CartesianProduct" not in plan_buck
-        assert "InMemoryTableScan" not in plan_buck
+        assert "CartesianProduct" not in plan
+        assert "InMemoryTableScan" not in plan
+        assert "documents.parquet" not in plan
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
@@ -418,7 +406,9 @@ def test_bucketed_reresolves_version_under_lock(spark, tmp_path, monkeypatch):
     name = sig.ensure_bucketed_signature_table(spark, sfp, sig.WINNOW_FPS)
     monkeypatch.setattr(sig, "ensure_signature_table", real_ensure)
     try:
-        stale_token = sig._bucketed_token(v1, "fp", 8)
+        stale_token = sig._bucketed_token(
+            v1, "fp", sig.auto_signature_buckets(v1)
+        )
         assert not name.endswith(stale_token), "mirror pinned stale version"
         want = {tuple(r) for r in sig.read_signature_table(spark, v2).collect()}
         assert {tuple(r) for r in spark.table(name).collect()} == want

@@ -99,11 +99,11 @@ def test_components_plan_has_no_cartesian(spark):
 def test_dup_components_match_driver_pairs_oracle(spark):
     """Corpus-scale check at sf0.001: components over d13's actual pairs
     equal union-find of those same pairs."""
-    from deed_ocr_spark.queries.textpipe import d13_winnow_dup_pairs
+    from deed_ocr_spark.queries.textpipe import QUERIES
 
     pairs = [
         (r["doc_a"], r["doc_b"])
-        for r in d13_winnow_dup_pairs(spark, SF).collect()
+        for r in QUERIES["d13_winnow_dup_pairs"](spark, SF).collect()
     ]
     got = {
         r["doc_id"]: r["component"]

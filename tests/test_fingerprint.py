@@ -3,7 +3,9 @@
 import random
 
 from deed_ocr_spark.kernels.fingerprint import winnow
-from deed_ocr_spark.queries.textpipe import d12_winnow_fingerprints, d13_winnow_dup_pairs
+from deed_ocr_spark.queries.textpipe import QUERIES, d12_winnow_fingerprints
+
+d13_winnow_dup_pairs = QUERIES["d13_winnow_dup_pairs"]  # the registered d13
 
 
 def _naive(text, k=8, w=4):

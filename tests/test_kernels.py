@@ -7,7 +7,6 @@ the reference-exact post-processing semantics.
 
 import re
 
-import pandas as pd
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
@@ -26,7 +25,6 @@ from deed_ocr_spark.kernels.ocr import Fragment, ocr_region_text, xy_cut_order
 from deed_ocr_spark.kernels.pdfblocks import segment_pdf_blocks
 from deed_ocr_spark.kernels.textops import (
     clean_watermarks,
-    clean_watermarks_series,
     ordered_dedup,
     page_concat,
 )
@@ -103,12 +101,6 @@ WM_CASES = [
 @pytest.mark.parametrize("text", WM_CASES)
 def test_clean_watermarks_parity(text):
     assert clean_watermarks(text) == _reference_clean(text)
-
-
-def test_clean_watermarks_series_matches_scalar():
-    s = pd.Series(WM_CASES, dtype="object")
-    out = clean_watermarks_series(s)
-    assert out.tolist() == [clean_watermarks(t) for t in WM_CASES]
 
 
 @given(

@@ -198,9 +198,11 @@ def test_table_level_delta_refuses_after_compaction(spark, tmp_path, monkeypatch
     _write_docs(spark, sf, 0, 40, 1, "overwrite")
     snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
     _write_docs(spark, sf, 40, 60, 1, "append")
-    sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
-    fam = os.path.dirname(sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS))
-    sig.compact_signature_table(spark, fam)
+    ver = sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
+    assert len(sig._add_dirs(ver)) == 1
+    # the accumulation bound at one add dir folds the append into the base
+    monkeypatch.setattr(sig, "SIG_COMPACT_AFTER", 1)
+    assert sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS) != ver
     with pytest.raises(ValueError, match="full query"):
         sig.winnow_dup_pairs_delta(spark, sf, snap)
 
@@ -338,65 +340,85 @@ def test_dup_components_scans_durable_pairs(spark, tmp_path, monkeypatch):
 
 
 # --- mirror route (round-6 VERDICT #3) ------------------------------------------
-def test_table_level_mirror_route_matches_broadcast(
-    spark, tmp_path, monkeypatch
-):
+def _delta_at_threshold(spark, monkeypatch, sf, snap, threshold):
+    """winnow_dup_pairs_delta run (and collected) with the session's
+    autoBroadcastJoinThreshold at ``threshold``, restored afterwards.
+    Returns ((added, retracted) pair sets, whether the fp-bucketed mirror
+    was resolved — i.e. which reduction route the delta chose)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    real = sig.ensure_bucketed_signature_table
+    calls = []
+
+    def counting(*a, **k):
+        calls.append(a)
+        return real(*a, **k)
+
+    monkeypatch.setattr(sig, "ensure_bucketed_signature_table", counting)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        sets = tuple(map(_pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap)))
+    finally:
+        spark.conf.set(key, prev)
+        monkeypatch.setattr(sig, "ensure_bucketed_signature_table", real)
+    return sets, bool(calls)
+
+
+def _drop_winnow_mirrors(spark):
+    for t in spark.catalog.listTables():
+        if t.name.startswith("sig_winnow_fps"):
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+
+def _appended(spark, tmp_path, monkeypatch):
+    """(sf, snapshot) of a 60-doc corpus that then grew by a 30-doc part."""
     monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
     sf = str(tmp_path / "sf")
     _write_docs(spark, sf, 0, 60, 2, "overwrite")
     snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
     _write_docs(spark, sf, 60, 90, 1, "append")
-    a_b, r_b = map(
-        _pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap, route="broadcast")
-    )
-    a_m, r_m = map(
-        _pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap, route="mirror")
-    )
-    name = None
-    for t in spark.catalog.listTables():
-        if t.name.startswith("sig_winnow_fps"):
-            name = t.name
+    return sf, snap
+
+
+def test_table_level_mirror_route_matches_broadcast(
+    spark, tmp_path, monkeypatch
+):
+    """The route threshold on both sides, identical rows: broadcasting
+    disabled (-1) takes the fp-bucketed mirror, a threshold far above the
+    append's bytes takes the broadcast route — and both answer the same
+    (added, retracted) sets."""
+    sf, snap = _appended(spark, tmp_path, monkeypatch)
     try:
-        assert (a_m, r_m) == (a_b, r_b) and a_b
+        mirror, used_m = _delta_at_threshold(spark, monkeypatch, sf, snap, "-1")
+        bcast, used_b = _delta_at_threshold(spark, monkeypatch, sf, snap, "1g")
+        assert used_m and not used_b
+        assert mirror == bcast and bcast[0]
     finally:
-        if name:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
+        _drop_winnow_mirrors(spark)
 
 
 def test_auto_route_picks_mirror_for_large_append(
     spark, tmp_path, monkeypatch
 ):
-    """route='auto' must go through the mirror when the new add-dirs'
-    bytes exceed the broadcast threshold (forced low here)."""
-    monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
-    sf = str(tmp_path / "sf")
-    _write_docs(spark, sf, 0, 60, 2, "overwrite")
-    snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
-    _write_docs(spark, sf, 60, 90, 1, "append")
-    calls = {"mirror": 0}
-    real = sig.ensure_bucketed_signature_table
-
-    def counting(*a, **k):
-        calls["mirror"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(sig, "ensure_bucketed_signature_table", counting)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+    """The byte comparison at its exact boundary: new add-dir bytes one
+    above the threshold go through the mirror, bytes equal to it stay on
+    the broadcast route — with identical rows."""
+    sf, snap = _appended(spark, tmp_path, monkeypatch)
+    ver = sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
+    new_bytes = sum(sum(sig._parquet_sizes(p)) for p, _ in sig._add_dirs(ver))
+    assert new_bytes > 1
     try:
-        a, r = map(
-            _pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap, route="auto")
+        above, used_above = _delta_at_threshold(
+            spark, monkeypatch, sf, snap, str(new_bytes - 1)
         )
+        at, used_at = _delta_at_threshold(
+            spark, monkeypatch, sf, snap, str(new_bytes)
+        )
+        assert used_above, "auto must route a too-big append via mirror"
+        assert not used_at
+        assert above == at and at[0]
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert calls["mirror"] == 1, "auto must route a too-big append via mirror"
-    a_b, r_b = map(
-        _pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap, route="broadcast")
-    )
-    assert (a, r) == (a_b, r_b)
-    for t in spark.catalog.listTables():
-        if t.name.startswith("sig_winnow_fps"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+        _drop_winnow_mirrors(spark)
 
 
 def test_mirror_reduction_never_exchanges_corpus_side(
@@ -479,11 +501,7 @@ def test_mirror_route_refuses_out_of_window_add_dir(
     answers."""
     import shutil
 
-    monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
-    sf = str(tmp_path / "sf")
-    _write_docs(spark, sf, 0, 60, 2, "overwrite")
-    snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
-    _write_docs(spark, sf, 60, 90, 1, "append")
+    sf, snap = _appended(spark, tmp_path, monkeypatch)
     ver = sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
     src = next(
         os.path.join(ver, n) for n in os.listdir(ver) if n.startswith("add-")
@@ -505,9 +523,9 @@ def test_mirror_route_refuses_out_of_window_add_dir(
     monkeypatch.setattr(sig, "_processed_parts", pp_missing_future)
     try:
         with pytest.raises(ValueError, match="outside this delta window"):
-            sig.winnow_dup_pairs_delta(spark, sf, snap, route="mirror")
-        a, r = sig.winnow_dup_pairs_delta(spark, sf, snap, route="broadcast")
-        assert _pair_set(a)
+            _delta_at_threshold(spark, monkeypatch, sf, snap, "-1")
+        (a, _r), used = _delta_at_threshold(spark, monkeypatch, sf, snap, "1g")
+        assert a and not used
     finally:
         shutil.rmtree(foreign)
 
@@ -517,49 +535,37 @@ def test_auto_route_uses_mirror_when_broadcast_disabled(
 ):
     """autoBroadcastJoinThreshold=-1 means the admin DISABLED broadcasting;
     the broadcast route's explicit hint would override that and ship an
-    arbitrarily large fp set (review F4) — auto must pick the mirror."""
-    monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
-    sf = str(tmp_path / "sf")
-    _write_docs(spark, sf, 0, 60, 2, "overwrite")
-    snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
-    _write_docs(spark, sf, 60, 90, 1, "append")
-    calls = {"mirror": 0}
-    real = sig.ensure_bucketed_signature_table
-
-    def counting(*a, **k):
-        calls["mirror"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(sig, "ensure_bucketed_signature_table", counting)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    arbitrarily large fp set (review F4). The same small append that the
+    session's default threshold keeps on the broadcast route must go
+    through the mirror once broadcasting is disabled."""
+    sf, snap = _appended(spark, tmp_path, monkeypatch)
+    default = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        a, r = map(
-            _pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap, route="auto")
+        disabled, used_d = _delta_at_threshold(
+            spark, monkeypatch, sf, snap, "-1"
         )
+        dflt, used_dflt = _delta_at_threshold(
+            spark, monkeypatch, sf, snap, default
+        )
+        assert used_d and not used_dflt
+        assert disabled == dflt
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert calls["mirror"] == 1
-    a_b, r_b = map(
-        _pair_set, sig.winnow_dup_pairs_delta(spark, sf, snap, route="broadcast")
-    )
-    assert (a, r) == (a_b, r_b)
-    for t in spark.catalog.listTables():
-        if t.name.startswith("sig_winnow_fps"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+        _drop_winnow_mirrors(spark)
 
 
 def test_stale_pairs_family_gc(tmp_path, monkeypatch):
     """A WINNOW_FPS algo bump must reclaim old fa<N> pairs dirs (review
-    F5) — _gc_stale_algo_versions cannot see them (pattern mismatch)."""
+    F5) through the same older-algo-version GC the base families use."""
     monkeypatch.setitem(sig.FAMILY_ALGO_VERSION, sig.WINNOW_FPS, 3)
     parent = tmp_path / "corpuskey"
     cur_dir = parent / "winnow_pairs-df64-fa3"
     old_dir = parent / "winnow_pairs-df64-fa2"
     other_df = parent / "winnow_pairs-df32-fa2"  # different df param
-    for d in (cur_dir, old_dir, other_df):
+    base = parent / "winnow_fps.a2"  # the fingerprint family itself
+    for d in (cur_dir, old_dir, other_df, base):
         d.mkdir(parents=True)
-    sig._gc_stale_pairs_versions(str(cur_dir), 64)
+    sig._gc_stale_algo_versions(str(cur_dir))
     assert cur_dir.is_dir(), "current version must survive"
     assert not old_dir.exists(), "older fa version reclaimed"
     assert other_df.is_dir(), "a different max_df family is not ours to GC"
+    assert base.is_dir(), "another family's stem is not ours to GC"

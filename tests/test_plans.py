@@ -12,7 +12,7 @@ from deed_ocr_spark.queries.relational import (
     j4_resume_antijoin,
     p1_filter_project,
 )
-from deed_ocr_spark.queries.textpipe import d9_minhash_band_pairs
+from deed_ocr_spark.queries.textpipe import QUERIES as TEXTPIPE
 
 SF = "/root/testdata/sf0.01"
 
@@ -52,23 +52,19 @@ def test_broadcast_join_used(spark):
 
 
 def test_lsh_pairs_plan_has_no_cartesian(spark):
-    plan = _plan(d9_minhash_band_pairs(spark, SF))
+    plan = _plan(TEXTPIPE["d9_minhash_band_pairs"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_d7_plan_scans_signature_table_not_corpus(spark):
-    """The plain d7 (identity baseline of registered d7b) routes through
-    the materialized shingle table (signatures.py): its plan must scan
-    signature parquet — never the documents corpus (no re-tokenize),
-    never a session-cache subtree (no InMemoryTableScan — the round-3
-    cache-residency regression), and never a cartesian product. The
-    registered bucketed form is plan-locked in
+    """d7 routes through the materialized shingle and bands tables
+    (signatures.py): its plan must scan signature parquet — never the
+    documents corpus (no re-tokenize), never a session-cache subtree (no
+    InMemoryTableScan — the round-3 cache-residency regression), and never
+    a cartesian product. Its exchange count is pinned in
     tests/test_bucketed_signatures.py."""
-    from deed_ocr_spark.queries.textpipe import d7_ngram_jaccard_pairs
-
-    df = d7_ngram_jaccard_pairs(spark, SF)
-    plan = _plan(df)
+    plan = _plan(TEXTPIPE["d7_ngram_jaccard_pairs"](spark, SF))
     assert "deed_ocr_signatures" in plan or "shingles" in plan
     assert "documents.parquet" not in plan, "d7 must not re-tokenize the corpus"
     assert "InMemoryTableScan" not in plan
@@ -76,9 +72,7 @@ def test_d7_plan_scans_signature_table_not_corpus(spark):
 
 
 def test_d13_plan_scans_signature_table_not_corpus(spark):
-    from deed_ocr_spark.queries.textpipe import d13_winnow_dup_pairs
-
-    plan = _plan(d13_winnow_dup_pairs(spark, SF))
+    plan = _plan(TEXTPIPE["d13_winnow_dup_pairs"](spark, SF))
     assert "winnow_fps" in plan
     assert "documents.parquet" not in plan, "d13 must not re-fingerprint the corpus"
     assert "InMemoryTableScan" not in plan

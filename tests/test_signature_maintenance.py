@@ -159,20 +159,21 @@ def test_compaction_folds_add_dirs_row_identically(spark, tmp_path, monkeypatch)
     for name, data in slices[1:]:  # three appends → three add dirs
         pq.write_table(data, corpus / name)
         assert sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES) == p
-    assert sig._add_dir_count(p) == 3
+    assert len(sig._add_dirs(p)) == 3
     before = {tuple(r) for r in sig.read_signature_table(spark, p).collect()}
     manifest_parts = sig._processed_parts(p, sig._read_manifest(p))
 
-    fam_dir = os.path.dirname(p)
-    p2 = sig.compact_signature_table(spark, fam_dir)
+    # the corpus is unchanged; lowering the accumulation bound to the
+    # current add-dir count makes the next ensure compact
+    monkeypatch.setattr(sig, "SIG_COMPACT_AFTER", 3)
+    p2 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES)
     assert p2 != p
-    assert sig._add_dir_count(p2) == 0
+    assert len(sig._add_dirs(p2)) == 0
     assert len(sig._parquet_sizes(p2)) <= 1, "tiny table binpacks to one file"
     assert sig._read_manifest(p2) == manifest_parts, "processed parts carried over"
     assert {tuple(r) for r in sig.read_signature_table(spark, p2).collect()} == before
-    # idempotent: a second compaction is a no-op
-    assert sig.compact_signature_table(spark, fam_dir) == p2
-    # and the maintained table is still judged current (no rebuild)
+    # idempotent: the compacted table is judged current (no rebuild, no
+    # second compaction)
     assert sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES) == p2
 
 
@@ -189,7 +190,7 @@ def test_auto_compaction_after_accumulated_appends(spark, tmp_path, monkeypatch)
     assert sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES) == p
     pq.write_table(slices[2][1], corpus / slices[2][0])
     p2 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES)
-    assert p2 != p and sig._add_dir_count(p2) == 0
+    assert p2 != p and len(sig._add_dirs(p2)) == 0
     # equality vs a from-scratch build over the combined corpus
     monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "scratch"))
     p3 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.SHINGLES)
@@ -530,10 +531,10 @@ def test_algo_gc_skips_old_dir_with_live_maintainer(tmp_path, monkeypatch):
             },
             f,
         )
-    sig._gc_stale_algo_versions(str(new_dir), sig.SHINGLES)
+    sig._gc_stale_algo_versions(str(new_dir))
     assert old_dir.is_dir(), "locked old-version dir must survive GC"
     os.unlink(old_dir / "_lock")
-    sig._gc_stale_algo_versions(str(new_dir), sig.SHINGLES)
+    sig._gc_stale_algo_versions(str(new_dir))
     assert not old_dir.exists(), "unlocked old-version dir reclaimed"
 
 
@@ -648,7 +649,7 @@ def test_partitioned_auto_compaction_keeps_chunks_one_file_each(
     }
     mm.ensure_media_table(spark, 150, seed=13)  # add dir 1
     p2 = mm.ensure_media_table(spark, 200, seed=13)  # add dir 2 → compact
-    assert p2 != p and sig._add_dir_count(p2) == 0, "auto-compaction ran"
+    assert p2 != p and len(sig._add_dirs(p2)) == 0, "auto-compaction ran"
     got = mm.read_media_table(spark, p2).select(
         "doc_id", "media_ref", "chunk"
     )

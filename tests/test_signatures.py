@@ -64,7 +64,7 @@ def test_ensure_signature_table_incremental_append(spark, tmp_path, monkeypatch)
     corpus.mkdir(parents=True)
     pq.write_table(tbl.slice(0, half), corpus / "part-000.parquet")
 
-    p = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.MINHASH_SIGS)
+    p = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.BANDS)
     old_files = {
         f: os.path.getmtime(os.path.join(p, f))
         for f in os.listdir(p)
@@ -73,17 +73,18 @@ def test_ensure_signature_table_incremental_append(spark, tmp_path, monkeypatch)
     n_half = sig.read_signature_table(spark, p).count()
 
     pq.write_table(tbl.slice(half), corpus / "part-001.parquet")
-    p2 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.MINHASH_SIGS)
+    p2 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.BANDS)
     assert p2 == p
     for f, mt in old_files.items():  # append: old signature files untouched
         assert os.path.getmtime(os.path.join(p, f)) == mt, f
     got = {tuple(r) for r in sig.read_signature_table(spark, p2).collect()}
-    assert len(got) == tbl.num_rows and n_half < tbl.num_rows
+    # two LSH bands per document
+    assert len(got) == 2 * tbl.num_rows and n_half < 2 * tbl.num_rows
 
     # equality vs a from-scratch build over the combined corpus
     scratch = tmp_path / "scratch"
     monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(scratch))
-    p3 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.MINHASH_SIGS)
+    p3 = sig.ensure_signature_table(spark, str(tmp_path / "sf"), sig.BANDS)
     want = {tuple(r) for r in sig.read_signature_table(spark, p3).collect()}
     assert got == want
 
