@@ -3,9 +3,15 @@
 The physical plan this produces (SURVEY.md §3.4):
 
     Scan (Iceberg in prod, parquet here; column-pruned to doc_id, spans)
-      → Exchange hashpartitioning(part_bucket, slice)   -- the ONLY shuffle
+      → Exchange hashpartitioning(part_bucket, slice, width)  -- the ONLY shuffle
       → MapInArrow (extract kernel, fused per-doc merge)
       → sink (partitionBy(part_bucket) write; dynamic partition overwrite)
+
+``width`` is derived, not configured (``repartition_for_bucketed_write``):
+as many tasks as the cores, or as the pending input bytes need at
+``spark.sql.files.maxPartitionBytes`` per task, and never more than the
+``(bucket, slice)`` write groups. Every Python task pays a fixed start-up
+cost, so the stage pays it once per core instead of once per bucket.
 
 The single exchange serves BOTH jobs a 100 TB run needs from it:
 
@@ -22,7 +28,8 @@ The single exchange serves BOTH jobs a 100 TB run needs from it:
   one file per (task, bucket) pair — a tasks×buckets small-file storm
   whose serialized commit anti-scales. Aligning the exchange to
   ``(part_bucket, slice)`` bounds each wave to ~files_per_bucket files
-  per bucket (``repartition_for_bucketed_write``); compact.py binpacks
+  per bucket (``repartition_for_bucketed_write``) — a group never spans
+  two tasks, however many groups one task holds; compact.py binpacks
   multi-wave accumulation after resumes.
 
 ``repartition_for_extract`` (generic doc_id+salt spread) remains for
@@ -60,7 +67,7 @@ def repartition_for_extract(df: DataFrame, n_partitions: int) -> DataFrame:
 
 
 def repartition_for_bucketed_write(
-    df: DataFrame, n_buckets: int, files_per_bucket: int = 1
+    df: DataFrame, n_buckets: int, files_per_bucket: int, pending_buckets: int
 ) -> DataFrame:
     """Bucket-aligned skew-breaking exchange for a ``partitionBy(
     part_bucket)`` sink. A partitioned write WITHOUT alignment emits one
@@ -68,11 +75,33 @@ def repartition_for_bucketed_write(
     commit cost anti-scales (measured: 32 tasks × 64 buckets = 2 048
     files for one wave). Shuffling on ``(part_bucket, slice)`` instead of
     ``(doc_id, salt)`` costs the same single exchange but bounds the wave
-    to ~``files_per_bucket`` files per bucket; ``slice`` is a pure
-    function of doc_id, so placement stays deterministic across resumed
-    runs, and slicing within a bucket spreads hot documents exactly like
-    the generic salt did. ``df`` must already carry ``part_bucket``."""
+    to ~``files_per_bucket`` files per bucket, however many tasks share
+    the buckets: a (bucket, slice) group never spans two tasks. ``slice``
+    is a pure function of doc_id, so placement stays deterministic across
+    resumed runs, and slicing within a bucket spreads hot documents
+    exactly like the generic salt did. ``df`` must already carry
+    ``part_bucket`` and hold only the ``pending_buckets`` buckets to write.
+
+    The task count is ``min(pending_buckets × files_per_bucket,
+    max(defaultParallelism, ceil(pending bytes /
+    spark.sql.files.maxPartitionBytes)))``: as wide as the cores (or as
+    the input bytes need), never wider than the write groups. Every Python
+    task pays a fixed start-up cost whatever it holds, so one task per
+    bucket made a 5 000-doc run pay it 32 times on 4 cores. Pending bytes
+    are ``df``'s plan size statistic (no job runs; a filter's statistic is
+    its child's, so it is scaled by ``pending_buckets / n_buckets``). A
+    file scan gives real bytes; an input without file statistics (a
+    generated ``range → mapInPandas`` corpus) is sized from default type
+    widths, which under-reads its spans, so the cores set the width."""
     files_per_bucket = max(1, files_per_bucket)
+    spark = df.sparkSession
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    by_bytes = -(-size * pending_buckets // (n_buckets * max_bytes))
+    width = min(
+        pending_buckets * files_per_bucket,
+        max(spark.sparkContext.defaultParallelism, by_bytes),
+    )
     # slice hash must be DECORRELATED from part_bucket's: with the same
     # xxhash64(doc_id), slice = hash mod k is a pure function of
     # bucket = hash mod n whenever k divides n, collapsing every bucket
@@ -84,9 +113,7 @@ def repartition_for_bucketed_write(
             "int"
         ),
     )
-    return sliced.repartition(
-        n_buckets * files_per_bucket, "part_bucket", "_slice"
-    ).drop("_slice")
+    return sliced.repartition(width, "part_bucket", "_slice").drop("_slice")
 
 
 def extract_spans(df: DataFrame, n_partitions: int = 0) -> DataFrame:

@@ -13,6 +13,11 @@ Spark idiom (SURVEY.md §2.8):
   files (kernels are pure ⇒ idempotent), never duplicates;
 * the state table commits AFTER the data write (data-before-state
   ordering ⇒ a crash between the two re-runs the bucket, which is safe);
+* the ledger is read ONCE per run, on the driver: one collect with
+  ``STATE_SCHEMA_DDL`` pinned (no inference job). The n_buckets check,
+  latest-row-per-bucket, the pending set and the returned counters are all
+  resolved in Python from that snapshot, and the new ledger rows come from
+  one collect of per-bucket metrics — a no-op resume is one Spark job;
 * resume consults the LATEST ledger row per bucket: ``done`` and
   ``failed`` are terminal, ``needs_retry`` re-runs with an incremented
   attempt counter; a bucket whose errors are all non-retryable, or whose
@@ -20,7 +25,10 @@ Spark idiom (SURVEY.md §2.8):
   forever (retry_helper.py:224-349 escalation semantics);
 * ``n_buckets`` is persisted in every ledger row — resuming with a
   different bucketing against the same state dir fails fast instead of
-  silently duplicating documents under a new partitioning.
+  silently duplicating documents under a new partitioning;
+* a ledger row that lacks a column the plan reads (null under the pinned
+  schema: a foreign or truncated ledger file) raises rather than
+  re-running or skipping buckets.
 
 The input is assumed snapshot-stable across resume attempts (on a real
 catalog you pin the Iceberg snapshot id in ``lineage``): a bucket marked
@@ -40,7 +48,7 @@ import time
 from typing import Optional
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from deed_ocr_spark import __version__
 from deed_ocr_spark.extract import SPANS_OUT_DDL
@@ -59,20 +67,40 @@ STATE_SCHEMA_DDL = (
 )
 
 _STATE_COLUMNS = [f.split()[0] for f in STATE_SCHEMA_DDL.split(", ")]
+# every column the resume plan and the counters read: never null in rows
+# this job writes
+_PLAN_COLUMNS = (
+    "part_bucket", "status", "attempts", "docs", "spans_emitted", "n_buckets",
+    "committed_at",
+)
+_WRITTEN_DDL = SPANS_OUT_DDL + ", part_bucket int"
+# job.partition_metrics' counts: zero for a bucket that held no documents
+_METRIC_COLUMNS = (
+    "docs", "spans_emitted", "pages_parsed", "ocr_regions", "span_errors",
+    "retryable_errors",
+)
 
 # Reference escalation ceiling: utils/retry_helper.py:224-349 retries a
 # failed PDF with max_retries=5 before giving up.
 MAX_ATTEMPTS = 5
 
 
-def read_state(spark: SparkSession, state_dir: str) -> Optional[DataFrame]:
+def read_state(spark: SparkSession, state_dir: str) -> Optional[list]:
+    """The whole ledger as driver rows: one scan with ``STATE_SCHEMA_DDL``
+    pinned (no schema-inference job) and one collect, or None when there is
+    no ledger yet. The ledger holds a few rows per bucket, so every resume
+    decision is made from this one snapshot in Python.
+
+    A pinned schema reads a column a file lacks as nulls, so a row missing
+    any column the resume plan reads raises instead of silently
+    re-running or skipping buckets."""
     # cheap existence probe first: avoids the JVM logging a PATH_NOT_FOUND
     # stack trace on every first run (local paths; remote URIs fall through
     # to the try/except)
     if "://" not in state_dir and not os.path.exists(state_dir):
         return None
     try:
-        return spark.read.parquet(state_dir)
+        rows = spark.read.schema(STATE_SCHEMA_DDL).parquet(state_dir).collect()
     except AnalysisException as exc:
         # Only a genuinely-missing ledger means "first run". Any other
         # analysis/IO error (corrupt files, permissions, unreadable schema)
@@ -82,40 +110,42 @@ def read_state(spark: SparkSession, state_dir: str) -> Optional[DataFrame]:
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None
         raise
+    lacking = sorted({c for r in rows for c in _PLAN_COLUMNS if r[c] is None})
+    if lacking:
+        raise ValueError(
+            f"state ledger at {state_dir} has rows without {lacking}; it was "
+            "not written by this job, and resuming from it could re-run or "
+            "skip buckets — repair it or use a fresh state/out location"
+        )
+    return rows
 
 
-def latest_state(state: DataFrame) -> DataFrame:
+def latest_rows(rows: list) -> dict:
     """One row per bucket: the highest-attempt (latest) ledger entry.
     ``attempts`` is monotone per bucket across runs, so it orders history
     without relying on wall-clock timestamps."""
-    w = Window.partitionBy("part_bucket").orderBy(
-        F.col("attempts").desc(), F.col("committed_at").desc()
-    )
-    return state.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1).drop("_rk")
+    latest = {}
+    for r in rows:
+        cur = latest.get(r["part_bucket"])
+        if cur is None or (r["attempts"], r["committed_at"]) > (
+            cur["attempts"],
+            cur["committed_at"],
+        ):
+            latest[r["part_bucket"]] = r
+    return latest
 
 
-def done_buckets(spark: SparkSession, state_dir: str) -> Optional[DataFrame]:
-    state = read_state(spark, state_dir)
-    if state is None:
-        return None
-    return (
-        latest_state(state)
-        .filter(F.col("status") == "done")
-        .select("part_bucket")
-        .distinct()
-    )
-
-
-def _check_n_buckets(state: DataFrame, state_dir: str, n_buckets: int) -> None:
-    ledger = [r["n_buckets"] for r in state.select("n_buckets").distinct().collect()]
-    if ledger and set(ledger) != {n_buckets}:
-        raise ValueError(
-            f"state ledger at {state_dir} was written with "
-            f"n_buckets={sorted(set(ledger))} but this run requested "
-            f"n_buckets={n_buckets}; resuming under a different bucketing "
-            "would duplicate documents — use the ledger's value or a fresh "
-            "state/out location"
-        )
+def _counters(latest: dict) -> dict:
+    # Counters over the LATEST row per bucket only — retried buckets appear
+    # multiple times in the append-only ledger and must not double-count.
+    status = [r["status"] for r in latest.values()]
+    return {
+        "buckets_done": status.count("done"),
+        "buckets_failed": status.count("failed"),
+        "buckets_retrying": status.count("needs_retry"),
+        "docs": sum(r["docs"] for r in latest.values()),
+        "spans": sum(r["spans_emitted"] for r in latest.values()),
+    }
 
 
 def _read_written_buckets(
@@ -130,8 +160,8 @@ def _read_written_buckets(
     ``basePath`` so ``part_bucket`` stays a partition column) keeps the
     listing O(this run's buckets): resuming 3 buckets of 100 000 lists 3
     directories. Buckets that held no documents produce no directory —
-    they are skipped here and get their ledger row via the left join +
-    fillna(0) in the caller.
+    they are skipped here and get a zero-metrics ledger row in the
+    caller.
 
     The pruned path engages only on POSITIVE evidence that the write
     landed on the driver's local filesystem: no URI scheme AND at least
@@ -154,7 +184,13 @@ def _read_written_buckets(
             if os.path.isdir(d := os.path.join(out_dir, f"part_bucket={b}"))
         ]
         if dirs:
-            return spark.read.option("basePath", out_dir).parquet(*dirs)
+            # this run's own dynamic overwrite just replaced these dirs, so
+            # their schema is known: pinning it skips an inference job
+            return (
+                spark.read.schema(_WRITTEN_DDL)
+                .option("basePath", out_dir)
+                .parquet(*dirs)
+            )
     try:
         return spark.read.parquet(out_dir).filter(
             F.col("part_bucket").isin(pending_ids)
@@ -162,8 +198,8 @@ def _read_written_buckets(
     except AnalysisException as exc:
         # ONLY the no-files cases (every pending bucket held zero
         # documents, or first run over an empty input) map to a typed
-        # empty frame — the caller's left join + fillna(0) turns it into
-        # per-bucket done rows. Any other analysis failure (corrupt or
+        # empty frame — the caller ledgers those buckets as done with zero
+        # metrics. Any other analysis failure (corrupt or
         # foreign files in out_dir, schema-resolution errors) must
         # propagate: swallowing it would ledger just-written buckets as
         # done with docs=0 and real span_errors would never escalate.
@@ -173,9 +209,7 @@ def _read_written_buckets(
             or "Path does not exist" in msg
             or "UNABLE_TO_INFER_SCHEMA" in msg
         ):
-            return spark.createDataFrame(
-                [], SPANS_OUT_DDL + ", part_bucket int"
-            )
+            return spark.createDataFrame([], _WRITTEN_DDL)
         raise
 
 
@@ -196,31 +230,34 @@ def run_extraction_job(
     ``only_buckets`` exists for fault-injection tests: it truncates the run
     after a subset of buckets, simulating a mid-job crash.
     """
-    bucketed = with_partition_bucket(input_df.select("doc_id", "spans"), n_buckets)
-
-    # Pending = buckets with no terminal ledger row. The ledger is tiny
-    # (≤ a few rows per bucket) so the latest-row resolution collects to the
-    # driver; the input-side restriction stays a partition filter (never a
-    # collect of doc ids).
-    state = read_state(spark, state_dir)
-    prev = {}
-    if state is not None:
-        _check_n_buckets(state, state_dir, n_buckets)
-        prev = {r["part_bucket"]: r for r in latest_state(state).collect()}
-    pending_ids, attempt_of = [], {}
+    # Pending = buckets with no terminal ledger row, resolved in Python from
+    # one ledger snapshot; the input-side restriction stays a partition
+    # filter (never a collect of doc ids).
+    rows = read_state(spark, state_dir) or []
+    ledger_buckets = {r["n_buckets"] for r in rows}
+    if ledger_buckets and ledger_buckets != {n_buckets}:
+        raise ValueError(
+            f"state ledger at {state_dir} was written with "
+            f"n_buckets={sorted(ledger_buckets)} but this run requested "
+            f"n_buckets={n_buckets}; resuming under a different bucketing "
+            "would duplicate documents — use the ledger's value or a fresh "
+            "state/out location"
+        )
+    latest = latest_rows(rows)
+    attempt_of = {}
     for b in range(n_buckets):
         if only_buckets is not None and b not in only_buckets:
             continue
-        row = prev.get(b)
+        row = latest.get(b)
         if row is None:
-            pending_ids.append(b)
             attempt_of[b] = 1
         elif row["status"] == "needs_retry":
-            pending_ids.append(b)
             attempt_of[b] = row["attempts"] + 1
         # 'done' and 'failed' are terminal: never re-scheduled
+    pending_ids = list(attempt_of)
     if not pending_ids:
-        return _job_counters(spark, state_dir)
+        return _counters(latest)
+    bucketed = with_partition_bucket(input_df.select("doc_id", "spans"), n_buckets)
     pending = bucketed.filter(F.col("part_bucket").isin(pending_ids))
 
     # ONE exchange, aligned to the sink: shuffle the kernel input on
@@ -228,10 +265,14 @@ def run_extraction_job(
     # number of files instead of one per (task, bucket) pair — the
     # partitioned-write small-file storm whose commit cost anti-scales
     # (job.repartition_for_bucketed_write). ``n_partitions`` sets the
-    # total task-count target; slices within a bucket spread hot docs
-    # exactly like the generic doc_id salt did.
+    # slices per bucket (its ratio to ``n_buckets``); slices within a
+    # bucket spread hot docs exactly like the generic doc_id salt did. The
+    # stage is as wide as the cores or the input bytes need, never one
+    # task per bucket.
     files_per_bucket = max(1, round(n_partitions / n_buckets)) if n_partitions else 1
-    pending = repartition_for_bucketed_write(pending, n_buckets, files_per_bucket)
+    pending = repartition_for_bucketed_write(
+        pending, n_buckets, files_per_bucket, len(pending_ids)
+    )
 
     # Bucket is recomputed from doc_id after the kernel (pure function —
     # cheaper than carrying it through the Arrow channel, and no join).
@@ -248,83 +289,63 @@ def run_extraction_job(
     t_write = time.time() - t_write0
 
     # 2) state commit (after data): per-bucket metrics ledger. The re-read
-    t_ledger0 = time.time()
     # is partition-PRUNED to the buckets this run wrote (at 100 TB a full
     # output re-scan here would dwarf the job; a pruned one is O(this run's
     # output) — df.observe() can't replace it because the ledger needs
     # per-bucket metrics, not global ones); buckets that held no documents
-    # still get a done row so resume never re-schedules them.
-    written = _read_written_buckets(spark, out_dir, pending_ids)
-    attempts_df = spark.createDataFrame(
-        [(b, attempt_of[b]) for b in pending_ids], "part_bucket int, attempts int"
-    )
-    # Status ladder (retry_helper.py:224-349): clean → done; errors but
-    # nothing retryable → failed; retryable errors with attempts left →
-    # needs_retry; escalation exhausted → failed. Data is written in every
-    # case (keep-going discipline) — status only governs re-scheduling.
-    status = (
-        F.when(F.col("span_errors") == 0, "done")
-        .when(F.col("retryable_errors") == 0, "failed")
-        .when(F.col("attempts") >= max_attempts, "failed")
-        .otherwise("needs_retry")
-    )
-    metrics = (
-        attempts_df.join(partition_metrics(written), "part_bucket", "left")
-        .fillna(
-            0,
-            [
-                "docs",
-                "spans_emitted",
-                "pages_parsed",
-                "ocr_regions",
-                "span_errors",
-                "retryable_errors",
-            ],
+    # still get a done row (zero metrics) so resume never re-schedules them.
+    t_ledger0 = time.time()
+    metrics = {
+        r["part_bucket"]: r.asDict()
+        for r in partition_metrics(
+            _read_written_buckets(spark, out_dir, pending_ids)
+        ).collect()
+    }
+    committed_at = time.time()
+    new_rows = []
+    for b in pending_ids:
+        row = {c: 0 for c in _METRIC_COLUMNS}
+        row["error_kind"] = ""
+        row.update(metrics.get(b, {}))
+        row.update(
+            run_id=run_id,
+            part_bucket=b,
+            attempts=attempt_of[b],
+            status=_status(row, attempt_of[b], max_attempts),
+            n_buckets=n_buckets,
+            lineage=lineage or f"code={__version__}",
+            committed_at=committed_at,
         )
-        .fillna("", ["error_kind"])
-        .withColumns(
-            {
-                "run_id": F.lit(run_id),
-                "status": status,
-                "n_buckets": F.lit(n_buckets),
-                "lineage": F.lit(lineage or f"code={__version__}"),
-                "committed_at": F.lit(time.time()),
-            }
+        new_rows.append(row)
+    (
+        spark.createDataFrame(
+            [tuple(r[c] for c in _STATE_COLUMNS) for r in new_rows], STATE_SCHEMA_DDL
         )
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(state_dir)
     )
-    metrics.select(*_STATE_COLUMNS).write.mode("append").parquet(state_dir)
     t_ledger = time.time() - t_ledger0
 
     # Per-phase wall times, surfaced for ops/scaling analysis: phase 1 is
     # the single data job (scan/generate → exchange → kernel → partitioned
-    # write + its commit), phase 2 the metrics re-read + ledger append
-    # (captured BEFORE the counters aggregation below, which scans the
-    # whole append-only ledger and grows with its history).
-    counters = _job_counters(spark, state_dir)
+    # write + its commit), phase 2 the metrics re-read + ledger append. The
+    # counters come from the snapshot plus the new rows, which are each
+    # pending bucket's latest entry.
+    latest.update((r["part_bucket"], r) for r in new_rows)
+    counters = _counters(latest)
     counters["wall_write_sec"] = round(t_write, 2)
     counters["wall_ledger_sec"] = round(t_ledger, 2)
     return counters
 
 
-def _job_counters(spark: SparkSession, state_dir: str) -> dict:
-    # Counters over the LATEST row per bucket only — retried buckets appear
-    # multiple times in the append-only ledger and must not double-count.
-    latest = latest_state(spark.read.parquet(state_dir))
-    row = latest.agg(
-        F.sum(F.when(F.col("status") == "done", 1).otherwise(0)).alias("buckets_done"),
-        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias(
-            "buckets_failed"
-        ),
-        F.sum(F.when(F.col("status") == "needs_retry", 1).otherwise(0)).alias(
-            "buckets_retrying"
-        ),
-        F.sum("docs").alias("docs"),
-        F.sum("spans_emitted").alias("spans"),
-    ).collect()[0]
-    return {
-        "buckets_done": row["buckets_done"] or 0,
-        "buckets_failed": row["buckets_failed"] or 0,
-        "buckets_retrying": row["buckets_retrying"] or 0,
-        "docs": row["docs"],
-        "spans": row["spans"],
-    }
+def _status(metrics: dict, attempts: int, max_attempts: int) -> str:
+    """Status ladder (retry_helper.py:224-349): clean → done; errors but
+    nothing retryable → failed; retryable errors with attempts left →
+    needs_retry; escalation exhausted → failed. Data is written in every
+    case (keep-going discipline) — status only governs re-scheduling."""
+    if metrics["span_errors"] == 0:
+        return "done"
+    if metrics["retryable_errors"] == 0 or attempts >= max_attempts:
+        return "failed"
+    return "needs_retry"

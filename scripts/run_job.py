@@ -42,9 +42,10 @@ def main(argv=None):
         "--partitions",
         type=int,
         default=0,
-        help="task-count target for the job's bucket-aligned exchange "
-        "(files per bucket ≈ partitions/buckets; 0 → one file per bucket) "
-        "and for --gen-docs generation parallelism",
+        help="(bucket, slice) groups for the job's bucket-aligned exchange "
+        "(≈ partitions/buckets slices, so at most that many files, per "
+        "bucket; 0 → one file per bucket; the task count follows cores and "
+        "input bytes) and --gen-docs generation parallelism",
     )
     p.add_argument(
         "--summaries-out",
@@ -83,12 +84,19 @@ def main(argv=None):
     if not args.input and not args.gen_docs:
         p.error("one of --input or --gen-docs is required")
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
     from deed_ocr_spark.corpus import corpus_df
+    from deed_ocr_spark.session import start_with_worker_daemon
     from deed_ocr_spark.state import run_extraction_job
 
-    spark = SparkSession.builder.appName(f"deed-ocr-extract-{args.run_id}").getOrCreate()
+    # spark-submit's --master and --conf are on the JVM this process joins
+    SparkContext._ensure_initialized()
+    spark = start_with_worker_daemon(
+        SparkSession.builder.appName(f"deed-ocr-extract-{args.run_id}"),
+        SparkConf().get("spark.master", "local[*]"),
+    )
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
 

@@ -72,7 +72,7 @@ def test_bucket_aligned_repartition_also_flattens_hot_tail(spark):
     assert max(loads) / mean < 1.35, sorted(loads)[-3:]
     # and the exchange itself bounds the task count to groups
     assert (
-        repartition_for_bucketed_write(df, 8, files_per_bucket=2)
+        repartition_for_bucketed_write(df, 8, files_per_bucket=2, pending_buckets=8)
         .rdd.getNumPartitions()
-        == 16
+        <= 16
     )

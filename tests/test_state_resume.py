@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from deed_ocr_spark.corpus import corpus_df
-from deed_ocr_spark.state import done_buckets, run_extraction_job
+from deed_ocr_spark.state import latest_rows, read_state, run_extraction_job
 
 N_DOCS = 80
 N_BUCKETS = 8
@@ -39,8 +39,8 @@ def test_crash_resume_exactly_once(spark, dirs, tmp_path):
         spark, df, out_dir, state_dir, run_id="r1",
         n_buckets=N_BUCKETS, only_buckets=[0, 1, 2],
     )
-    done = done_buckets(spark, state_dir)
-    assert sorted(r["part_bucket"] for r in done.collect()) == [0, 1, 2]
+    latest = latest_rows(read_state(spark, state_dir))
+    assert sorted(b for b, r in latest.items() if r["status"] == "done") == [0, 1, 2]
     partial = _collect_spans(spark, out_dir)
     assert partial  # something committed
 
@@ -242,3 +242,26 @@ def test_resume_leaves_session_overwrite_mode_alone(spark, dirs):
         assert {d: after[d] for d in first} == first
     finally:
         spark.conf.set(key, prior)
+
+
+@pytest.mark.parametrize("column", ["n_buckets", "status"])
+def test_ledger_missing_column_fails_loud(spark, dirs, column):
+    """The ledger is read with its schema pinned, so a file that lacks a
+    column reads as nulls. A resume must raise on it, neither re-running
+    every bucket (null status is not 'done') nor skipping any."""
+    import pyarrow.parquet as pq
+
+    out_dir, state_dir = dirs
+    df = corpus_df(spark, 20, seed=9, n_partitions=2)
+    run_extraction_job(spark, df, out_dir, state_dir, run_id="a", n_buckets=4)
+    (ledger,) = [f for f in os.listdir(state_dir) if f.endswith(".parquet")]
+    path = os.path.join(state_dir, ledger)
+    pq.write_table(pq.read_table(path).drop_columns([column]), path)
+    os.remove(os.path.join(state_dir, f".{ledger}.crc"))  # stale checksum
+    before = _collect_spans(spark, out_dir)
+
+    with pytest.raises(ValueError, match=column):
+        run_extraction_job(spark, df, out_dir, state_dir, run_id="b", n_buckets=4)
+    assert _collect_spans(spark, out_dir) == before
+    assert os.listdir(state_dir).count(ledger) == 1
+    assert len([f for f in os.listdir(state_dir) if f.endswith(".parquet")]) == 1

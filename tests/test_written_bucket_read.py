@@ -7,7 +7,7 @@ frame ONLY with files under the pending buckets' directories (the
 O(pending) listing property — resuming 3 buckets of 100k must not list
 the other 99 997), and (c) degrade to an empty, correctly-typed frame
 when no pending bucket produced output (empty buckets still get their
-ledger row via the caller's left join + fillna).
+ledger row with zero metrics from the caller).
 """
 
 import pytest
