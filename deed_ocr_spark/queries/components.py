@@ -10,15 +10,20 @@ edges B-C and A-C with A<B<C keep both A and B).
 Algorithm: the alternating large-star / small-star method of Kiveris,
 Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected Components in
 MapReduce and Beyond" (SoCC 2014 — public paper). Both operations are
-pure relational steps (symmetrize -> per-node min -> equi-join), each
-round is two shuffles keyed on node id, the edge multiset shrinks
+pure relational steps: symmetrize, then a per-node minimum taken as a
+window (``min(v) over (partition by u)``) on an explicit repartition by
+node id, so the minimum never needs a join back onto the edges. A round
+is three exchanges, all on ``u`` at one width: large star, small star,
+and the round's closing ``distinct``. The edge multiset shrinks
 monotonically toward a star forest, and convergence takes O(log^2 n)
 rounds on adversarial graphs (in practice a handful: near-dup clusters
 are shallow). Nothing here collects edges to the driver — the loop's
 only driver-side values are one (count, hash) scalar pair per round for
 the fixpoint test, exactly the control-plane shape a 10^12-doc run
-needs. Compare GraphFrames' connectedComponents, which implements the
-same family of algorithms on top of the same DataFrame operations.
+needs — and nothing writes session conf: each round's width is an
+argument of its repartitions. Compare GraphFrames' connectedComponents,
+which implements the same family of algorithms on top of the same
+DataFrame operations.
 
 Engine addition beyond the reference (its similarity self-dedup,
 extractors/llm.py:195-217, dedups WITHIN one document's candidate list;
@@ -33,7 +38,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 # Far above the O(log^2 n) bound for any feasible corpus (n = 10^12 =>
@@ -45,7 +50,10 @@ MAX_ROUNDS = 64
 # edges on a crawl corpus) and SHRINKS monotonically — a fixed session
 # default either makes multi-GB partitions early or thousands of empty
 # ones late. Each round re-derives the partition count from the CURRENT
-# edge count; AQE coalescing then trims the tail.
+# edge count and passes it to its three ``repartition(n, "u")`` calls; a
+# repartition by number is never coalesced by AQE, so the width is exact,
+# and the session's ``spark.sql.shuffle.partitions`` is neither read nor
+# written by a round.
 EDGES_PER_PARTITION = 2_000_000
 MAX_ROUND_PARTITIONS = 4096
 
@@ -67,38 +75,52 @@ def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     return e.filter(F.col("u") != F.col("v")).distinct()
 
 
+def _edges_of(df: DataFrame, *ends) -> DataFrame:
+    """(u, v) rows, one per (u, v) column pair in ``ends`` for every row
+    of ``df``, in one pass: a union of projections would plan the input
+    subtree twice (and, under a window, compute it twice)."""
+    structs = (F.struct(u.alias("u"), v.alias("v")) for u, v in ends)
+    return df.select(F.explode(F.array(*structs)).alias("e")).select(
+        "e.u", "e.v"
+    )
+
+
 def _symmetrize(e: DataFrame) -> DataFrame:
-    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    u, v = F.col("u"), F.col("v")
+    return _edges_of(e, (u, v), (v, u))
 
 
-def _large_star(sym: DataFrame) -> DataFrame:
+def _large_star(sym: DataFrame, n_parts: int) -> DataFrame:
     """For every node u: attach each STRICTLY LARGER neighbor to
     m = min(neighborhood(u) + {u}). Keeps connectivity, only ever lowers
-    labels (Kiveris et al. Thm 1)."""
-    mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    mins = mins.select("u", F.least("mn", "u").alias("m"))
+    labels (Kiveris et al. Thm 1). One exchange: the minimum is a window
+    over the ``u`` partitioning; duplicates are left to the round's
+    closing distinct."""
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
-        sym.join(mins, "u")
+        sym.repartition(n_parts, "u")
+        .select("u", "v", m.alias("m"))
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
     )
 
 
-def _small_star(sym: DataFrame) -> DataFrame:
+def _small_star(sym: DataFrame, n_parts: int) -> DataFrame:
     """For every node u: attach u and each SMALLER neighbor to the
-    minimum of those smaller neighbors."""
-    smaller = sym.filter(F.col("v") < F.col("u"))
-    mins = smaller.groupBy("u").agg(F.min("v").alias("m"))
-    moved = (
-        smaller.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    minimum m of those smaller neighbors. Two exchanges: the window on
+    ``u``, then the closing distinct on the same ``u`` partitioning (a
+    hash partitioning on ``u`` already clusters every (u, v) group)."""
+    smaller = (
+        sym.filter(F.col("v") < F.col("u"))
+        .repartition(n_parts, "u")
+        .select("u", "v", F.min("v").over(Window.partitionBy("u")).alias("m"))
     )
-    self_edges = mins.select("u", F.col("m").alias("v"))
+    moved = _edges_of(
+        smaller, (F.col("v"), F.col("m")), (F.col("u"), F.col("m"))
+    )
     return (
-        moved.union(self_edges)
-        .filter(F.col("u") != F.col("v"))
+        moved.filter(F.col("u") != F.col("v"))
+        .repartition(n_parts, "u")
         .distinct()
     )
 
@@ -155,61 +177,41 @@ def connected_components(
 
     Pass a dict as ``stats`` to receive {"rounds": int} for convergence
     telemetry (the scale smoke records it)."""
-    e0, prev = _checkpoint_with_digest(_canonical_edges(pairs, src, dst))
-    # nodes derive from the CHECKPOINTED frame — lineage through `pairs`
-    # would re-execute the whole upstream pair query (d13's corpus
-    # self-join) inside the centers anti-join on every downstream action —
-    # and are MATERIALIZED here so e0's blocks can be released once the
-    # first round supersedes it (see unpersist below)
-    nodes = (
-        _symmetrize(e0)
-        .select(F.col("u").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    spark = e0.sparkSession
-    orig_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    e = e0
+    e, prev = _checkpoint_with_digest(_canonical_edges(pairs, src, dst))
+    spark = e.sparkSession
     rounds = 0
-    try:
-        while rounds < MAX_ROUNDS:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(_round_partitions(spark, prev[0])),
-            )
-            # One round per checkpoint, never more: each star round
-            # references its input ~4x and Catalyst shares no common
-            # subtrees, so an unmaterialized k-round stride plans ~4^k
-            # subtree copies; stride 2 measured slower than stride 1 at
-            # 3.6k, 3x10^5, 2x10^7 and 10^8 edges (BENCH.md, CHANGES.md).
-            nxt = _small_star(_symmetrize(_large_star(_symmetrize(e))))
-            e_next, cur = _checkpoint_with_digest(nxt)
-            rounds += 1
-            # e_next is materialized and never references e, so the
-            # superseded round's pinned blocks are safe to drop
-            _release_checkpoint(e)
-            e = e_next
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {MAX_ROUNDS} "
-                "rounds"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig_parts)
+    while rounds < MAX_ROUNDS:
+        # One round per checkpoint, never more: each star round
+        # references its input ~4x and Catalyst shares no common
+        # subtrees, so an unmaterialized k-round stride plans ~4^k
+        # subtree copies; stride 2 measured slower than stride 1 at
+        # 3.6k, 3x10^5, 2x10^7 and 10^8 edges (BENCH.md, CHANGES.md).
+        n = _round_partitions(spark, prev[0])
+        nxt = _small_star(_symmetrize(_large_star(_symmetrize(e), n)), n)
+        e_next, cur = _checkpoint_with_digest(nxt)
+        rounds += 1
+        # e_next is materialized and never references e, so the
+        # superseded round's pinned blocks are safe to drop
+        _release_checkpoint(e)
+        e = e_next
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_ROUNDS} rounds"
+        )
     if stats is not None:
         stats["rounds"] = rounds
 
-    # fixpoint edge set is a star forest: (member, center) with center =
-    # component min; centers (and only they) are absent from the child side
+    # the fixpoint edge set is a star forest of (member, center) edges
+    # with u > v: every v is a center (its component's minimum), and
+    # every center is some member's v
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
-    centers = nodes.join(
-        members.select("doc_id"), "doc_id", "left_anti"
-    ).select("doc_id", F.col("doc_id").alias("component"))
-    return members.union(centers)
+    centers = e.select(F.col("v").alias("doc_id")).distinct()
+    return members.union(
+        centers.select("doc_id", F.col("doc_id").alias("component"))
+    )
 
 
 def dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,26 +251,6 @@ def d16_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def canonical_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One keeper per duplicate CLUSTER (the transitive-closure upgrade of
-    d14's greedy pair policy): every doc outside any dup pair keeps
-    itself; inside a cluster only the smallest doc_id survives.
-
-    Chaining caveat (inherent to transitive closure, not this operator):
-    near-dup is not transitive, so pairwise-similar TEMPLATES chain —
-    on the synthetic sf0.01 corpus d13's default min_shared=1 pairs
-    connect 498/500 docs into one cluster. A production curation run
-    tightens the pair predicate (min_shared, Jaccard threshold) or
-    re-verifies within oversized clusters before dropping; the operator
-    clusters whatever pair frame it is given."""
-    from deed_ocr_spark.queries.common import t
-
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    comp = dup_components(spark, sf_dir)
-    dropped = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
-    return docs.join(dropped, "doc_id", "left_anti")
-
-
 # --- incremental label maintenance ---------------------------------------------
 def update_components(
     old_labels: DataFrame,
@@ -306,35 +288,17 @@ def update_components(
     ``old_labels`` should arrive materialized (a table scan or a
     checkpointed frame): its lineage is evaluated a few times below, and
     re-running a full clustering per evaluation would defeat the point.
-    The DELTA frames are checkpointed here exactly once — a caller
-    passing the lazy |new|×corpus delta query must not pay that join per
-    downstream action."""
+    The DELTA is checkpointed here exactly once, added and retracted
+    edges together as one tagged frame — a caller passing the lazy
+    |new|×corpus delta query must not pay that join per downstream
+    action — and the same action counts the retracted edges. With none,
+    no cluster is wounded: the affected-node set, its checkpoint and the
+    ``current_pairs`` scan are skipped."""
     old = old_labels.select("doc_id", "component")
-    add_e = _canonical_edges(added, src, dst).localCheckpoint(eager=True)
-    retr_e = _canonical_edges(retracted, src, dst).localCheckpoint(
-        eager=True
-    )
+    delta, n_retracted = _checkpoint_delta(added, retracted, src, dst)
+    add_e = delta.filter("added").select("u", "v")
 
-    # clusters wounded by a retraction → their full node sets re-solve
-    wounded = (
-        old.join(
-            _symmetrize(retr_e).select(F.col("u").alias("doc_id")).distinct(),
-            "doc_id",
-            "semi",
-        )
-        .select("component")
-        .distinct()
-    )
-    aff_nodes = (
-        old.join(wounded, "component", "semi")
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    # rep: identity for affected nodes and brand-new docs (absent rows →
-    # coalesce to the node itself), old cluster label otherwise
-    rep = old.join(aff_nodes, "doc_id", "left_anti")
-
-    def contracted(e: DataFrame) -> DataFrame:
+    def contracted(e: DataFrame, rep: DataFrame) -> DataFrame:
         for side in ("u", "v"):
             e = (
                 e.join(
@@ -350,32 +314,48 @@ def update_components(
             )
         return e
 
-    # raw projection, NO distinct: a pre-semi distinct would aggregate
-    # the whole corpus-scale pair graph before the delta-sized restriction
-    # (Catalyst cannot push a semi-join below an Aggregate), and
-    # connected_components dedups its input anyway. Components partition
-    # G: both endpoints of a non-added edge incident to an affected
-    # cluster lie inside affected clusters, so the u-side semi suffices.
-    cur_raw = current_pairs.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    sub_e = cur_raw.join(
-        aff_nodes.withColumnRenamed("doc_id", "u"), "u", "semi"
-    )
-    reduced = contracted(add_e).unionByName(sub_e).filter("u != v")
+    if n_retracted:
+        # clusters wounded by a retraction → their full node sets re-solve
+        retr_e = delta.filter(~F.col("added")).select("u", "v")
+        wounded = (
+            old.join(
+                _symmetrize(retr_e).select(F.col("u").alias("doc_id")),
+                "doc_id",
+                "semi",
+            )
+            .select("component")
+            .distinct()
+        )
+        aff_nodes = (
+            old.join(wounded, "component", "semi")
+            .select("doc_id")
+            .localCheckpoint(eager=True)
+        )
+        # rep: the old cluster label of every unaffected node; affected
+        # nodes and brand-new docs have no row (coalesce to the node)
+        rep = old.join(aff_nodes, "doc_id", "left_anti")
+        # raw projection, NO distinct: a pre-semi distinct would aggregate
+        # the whole corpus-scale pair graph before the delta-sized
+        # restriction (Catalyst cannot push a semi-join below an
+        # Aggregate), and connected_components dedups its input anyway.
+        # Components partition G: both endpoints of a non-added edge
+        # incident to an affected cluster lie inside affected clusters, so
+        # the u-side semi suffices.
+        sub_e = current_pairs.select(
+            F.col(src).alias("u"), F.col(dst).alias("v")
+        ).join(aff_nodes.withColumnRenamed("doc_id", "u"), "u", "semi")
+        reduced = contracted(add_e, rep).unionByName(sub_e)
+    else:
+        rep = old
+        reduced = contracted(add_e, rep)
     labels_r = connected_components(
         reduced.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b"))
     )
 
-    new_docs = (
-        _symmetrize(add_e)
-        .select(F.col("u").alias("doc_id"))
-        .distinct()
-        .join(old, "doc_id", "left_anti")
-    )
-    direct = labels_r.join(
-        aff_nodes.unionByName(new_docs).distinct(), "doc_id", "semi"
-    )
+    # the reduced graph's nodes are supernodes (old labels of unaffected
+    # clusters, each a doc of rep), affected nodes and new docs — the last
+    # two take their reduced label directly
+    direct = labels_r.join(rep.select("doc_id"), "doc_id", "left_anti")
     merged = labels_r.select(
         F.col("doc_id").alias("component"),
         F.col("component").alias("_m"),
@@ -389,21 +369,49 @@ def update_components(
     return carried.unionByName(direct)
 
 
+def _checkpoint_delta(
+    added: DataFrame, retracted: DataFrame, src: str, dst: str
+):
+    """The edge delta as ONE eager checkpoint of (u, v, added) rows,
+    self-loops dropped, and the number of retracted rows — observed by
+    the checkpoint's own action."""
+
+    def tagged(df: DataFrame, flag: bool) -> DataFrame:
+        return df.select(
+            F.col(src).alias("u"), F.col(dst).alias("v"),
+            F.lit(flag).alias("added"),
+        )
+
+    obs = Observation()
+    delta = (
+        tagged(added, True)
+        .unionByName(tagged(retracted, False))
+        .filter(F.col("u") != F.col("v"))
+        .observe(obs, F.count(F.when(~F.col("added"), 1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    return delta, int(obs.get["n"])
+
+
 def dup_components_incremental(
     spark: SparkSession, sf_dir: str, old_labels: DataFrame,
     since: dict, max_df: int = 64,
 ) -> DataFrame:
-    """Table-level composition: pair delta from the fingerprint table's
-    add-dir provenance (signatures.winnow_dup_pairs_delta) + the durable
-    pairs table brought current (ensure_dup_pairs_table, REUSING the same
-    delta via delta_hint so the |new|×corpus join runs once) + label
-    maintenance (update_components). ``since`` is the processed_parts
-    snapshot ``old_labels`` was computed against; raises ValueError (run
-    the full dup_components) when provenance is insufficient — including
-    when a CONCURRENT append widened the pairs table's window past this
-    delta's: update_components' precondition is current_pairs == old ∪
-    added − retracted, and a silently wider table would drop the
-    concurrent docs' labels and merges with no error."""
+    """Table-level composition: the durable pairs table brought current
+    (ensure_dup_pairs_table) + the pair delta since ``since`` from the
+    fingerprint table's add-dir provenance (signatures.winnow_dup_pairs_delta)
+    + label maintenance (update_components). When the table's own delta
+    window is this one, the delta call is served from the result the
+    table's maintenance just computed, so the |new|×corpus join runs once.
+    The table goes first: a delta taken first could be released by the
+    table's maintenance computing a different window, and the labels
+    still need it. ``since`` is the processed_parts snapshot
+    ``old_labels`` was computed against; raises ValueError (run the full
+    dup_components) when provenance is insufficient — including when a
+    CONCURRENT append makes the table's window differ from this delta's:
+    update_components' precondition is current_pairs == old ∪ added −
+    retracted, and a silently different table would drop the concurrent
+    docs' labels and merges with no error."""
     from deed_ocr_spark.signatures import (
         _read_manifest,
         ensure_dup_pairs_table,
@@ -411,23 +419,16 @@ def dup_components_incremental(
         winnow_dup_pairs_delta,
     )
 
+    ver = ensure_dup_pairs_table(spark, sf_dir, max_df)
     window: dict = {}
     added, retracted = winnow_dup_pairs_delta(
         spark, sf_dir, since, max_df, window=window
     )
-    added = added.localCheckpoint(eager=True)
-    retracted = retracted.localCheckpoint(eager=True)
-    ver = ensure_dup_pairs_table(
-        spark,
-        sf_dir,
-        max_df,
-        delta_hint=(since, window["parts"], added, retracted),
-    )
     if _read_manifest(ver) != window["parts"]:
         raise ValueError(
-            "the durable pairs table covers a wider window than this "
-            "label delta (a concurrent append landed) — recompute labels "
-            "with the full dup_components"
+            "the durable pairs table and this label delta disagree on the "
+            "window (a concurrent append landed a wider window) — "
+            "recompute labels with the full dup_components"
         )
     pairs_now = read_signature_table(spark, ver)
     return update_components(old_labels, pairs_now, added, retracted)

@@ -44,6 +44,7 @@ import os
 import re
 import shutil
 import stat as stat_mod
+import threading
 import time
 from contextlib import contextmanager
 from typing import Callable, List, Optional
@@ -888,7 +889,17 @@ def winnow_dup_pairs_delta(
     base — in which case the caller runs the full query. An Iceberg
     catalog would serve the same split from its incremental snapshot
     scan; the fallback rule is identical there (changed/compacted files
-    void incremental reads)."""
+    void incremental reads).
+
+    The result is materialized as one tagged checkpoint and kept
+    in-process as the LATEST delta, keyed on (session, fps version dir,
+    ``since``, processed parts, ``max_df``): asking again for the same
+    window — ensure_dup_pairs_table's delta path right after a caller
+    took the delta — reads it back instead of re-running the join, under
+    either route (both answer the same rows). Computing another window
+    releases the previous result's blocks, so returned frames stay
+    readable until the next call for a different window in this process;
+    keep them longer by checkpointing them."""
     from deed_ocr_spark.queries.textpipe import winnow_pair_delta
 
     ver = ensure_signature_table(spark, sf_dir, WINNOW_FPS)
@@ -944,6 +955,13 @@ def winnow_dup_pairs_delta(
             .limit(0)
         )
         return empty, empty
+    key = (
+        spark, ver, frozenset(since.items()), frozenset(processed.items()),
+        max_df,
+    )
+    memo = _pair_delta_memo
+    if memo is not None and memo[0] == key:
+        return _split_pair_delta(memo[1])
     old_paths = base + old_dirs
     old_rows = (
         spark.read.parquet(*old_paths).select("doc_id", "fp")
@@ -996,8 +1014,42 @@ def winnow_dup_pairs_delta(
                 "re-snapshot and retry, or run the full recompute"
             )
         corpus_fps = spark.table(name).select("doc_id", "fp")
-    return winnow_pair_delta(
+    added, retracted = winnow_pair_delta(
         old_rows, new_rows, max_df=max_df, corpus_fps=corpus_fps
+    )
+    both = (
+        added.select("doc_a", "doc_b", F.lit(True).alias("added"))
+        .unionByName(
+            retracted.select("doc_a", "doc_b", F.lit(False).alias("added"))
+        )
+        .localCheckpoint(eager=True)
+    )
+    _remember_pair_delta(key, both)
+    return _split_pair_delta(both)
+
+
+# The latest pair delta this process computed: (key, tagged checkpoint).
+# One entry bounds the pinned blocks to one delta-sized frame; the lock
+# makes the swap atomic, so every replaced entry is released once.
+_pair_delta_memo: Optional[tuple] = None
+_pair_delta_lock = threading.Lock()
+
+
+def _remember_pair_delta(key: tuple, both: DataFrame) -> None:
+    from deed_ocr_spark.queries.components import _release_checkpoint
+
+    global _pair_delta_memo
+    with _pair_delta_lock:
+        prev, _pair_delta_memo = _pair_delta_memo, (key, both)
+    if prev is not None:
+        _release_checkpoint(prev[1])
+
+
+def _split_pair_delta(both: DataFrame):
+    """(added, retracted) frames over one tagged delta checkpoint."""
+    return (
+        both.filter(F.col("added")).select("doc_a", "doc_b"),
+        both.filter(~F.col("added")).select("doc_a", "doc_b"),
     )
 
 
@@ -1027,7 +1079,6 @@ def ensure_dup_pairs_table(
     spark: SparkSession,
     sf_dir: str,
     max_df: int = 64,
-    delta_hint: Optional[tuple] = None,
 ) -> str:
     """Durable (doc_a, doc_b) duplicate-pair table (d13's min_shared=1
     pair set), incrementally maintained; returns the current VERSION dir.
@@ -1051,10 +1102,11 @@ def ensure_dup_pairs_table(
     set reflects, making staleness structural exactly like every other
     family. min_shared is pinned to 1 (the delta's contract).
 
-    ``delta_hint`` = (since, end_parts, added_df, retracted_df): a delta
-    the caller already computed for exactly this window — reused (saving
-    the |new|×corpus join) only when both endpoints match the table's
-    own [manifest, fps snapshot] window; otherwise ignored."""
+    The delta path asks winnow_dup_pairs_delta for exactly the table's
+    [manifest, fps snapshot] window, so a delta a caller just took for
+    that window (the curation cycle, the incremental label maintenance)
+    is read back from its in-process result, not recomputed; any other
+    window is computed here."""
     fps_snapshot = processed_parts(spark, sf_dir, WINNOW_FPS)
     family_dir = family_dir_for(
         _docs_parquet_path(sf_dir), _pairs_family_tag(max_df)
@@ -1069,23 +1121,9 @@ def ensure_dup_pairs_table(
             and all(fps_snapshot.get(k) == v for k, v in old_snap.items())
         ):
             try:
-                # A caller that already computed THIS window's delta (the
-                # incremental label maintenance) passes it as
-                # (since, end_parts, added, retracted); reusing it only
-                # when BOTH endpoints match keeps the manifest honest —
-                # applying a narrower hinted delta while recording the
-                # wider fps_snapshot would silently drop the concurrent
-                # parts' pairs from the table forever.
-                if (
-                    delta_hint is not None
-                    and delta_hint[0] == old_snap
-                    and delta_hint[1] == fps_snapshot
-                ):
-                    added, retracted = delta_hint[2], delta_hint[3]
-                else:
-                    added, retracted = winnow_dup_pairs_delta(
-                        spark, sf_dir, old_snap, max_df=max_df
-                    )
+                added, retracted = winnow_dup_pairs_delta(
+                    spark, sf_dir, old_snap, max_df=max_df
+                )
                 old_pairs = read_signature_table(spark, cur).select(
                     "doc_a", "doc_b"
                 )

@@ -358,7 +358,12 @@ def main(argv=None):
         t0 = time.monotonic()
         ensure_bucketed_signature_table(spark, base_dir, WINNOW_FPS, key="fp")
         out["mirror_refresh_sec"] = round(time.monotonic() - t0, 2)
+        import deed_ocr_spark.signatures as sig
+
         for route in ("broadcast", "mirror"):
+            # forget the in-process delta of this window (phase 4's frames
+            # stay readable): a read-back would time no route at all
+            sig._pair_delta_memo = None
             t0 = time.monotonic()
             with _delta_route(spark, route):
                 a_r, r_r = winnow_dup_pairs_delta(spark, base_dir, snap)
@@ -371,7 +376,8 @@ def main(argv=None):
 
     # 4c. durable pairs table maintained THROUGH the delta: a fresh
     # version written as old ∪ added − retracted over the small stored
-    # table — no corpus-scale pair recompute
+    # table — no corpus-scale pair recompute; the delta of this window is
+    # read back from phase 4's in-process result, not recomputed
     t0 = time.monotonic()
     pairs_ver_incr = ensure_dup_pairs_table(spark, base_dir)
     out["pairs_table_delta_sec"] = round(time.monotonic() - t0, 2)

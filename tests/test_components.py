@@ -1,11 +1,10 @@
-"""Connected-components operator vs a Python union-find oracle, plus the
-canonical (transitive-closure) keep-list semantics it enables."""
+"""Connected-components operator vs a Python union-find oracle, and
+incremental label maintenance vs a recompute."""
 
 import random
 
 import pytest
 from deed_ocr_spark.queries.components import (
-    canonical_keeplist,
     connected_components,
     dup_components,
 )
@@ -113,27 +112,6 @@ def test_dup_components_match_driver_pairs_oracle(spark):
     assert len(got) > 0, "sf0.001 corpus must contain at least one dup pair"
 
 
-def test_canonical_keeplist_keeps_one_per_cluster(spark):
-    from deed_ocr_spark.queries.common import t
-
-    comp = {
-        r["doc_id"]: r["component"]
-        for r in dup_components(spark, SF).collect()
-    }
-    all_docs = {
-        r["doc_id"] for r in t(spark, SF, "documents").select("doc_id").collect()
-    }
-    keep = {r["doc_id"] for r in canonical_keeplist(spark, SF).collect()}
-    # exactly: docs outside any pair, plus each cluster's minimum
-    expected = (all_docs - set(comp)) | {
-        m for m in comp.values()
-    }
-    assert keep == expected
-    # and every cluster contributes exactly its representative
-    for doc, m in comp.items():
-        assert (doc in keep) == (doc == m)
-
-
 def test_d16_registered_with_oracle_and_matches_union_find(spark):
     """Round-6 registration lock: d16_dup_components sits in the 50-slot
     registry WITH a DuckDB oracle (the swap's whole point was raising the
@@ -166,14 +144,15 @@ def _labels(df):
     return {r["doc_id"]: r["component"] for r in df.collect()}
 
 
+def _edges(spark, pairs):
+    return spark.createDataFrame(
+        pairs or [(None, None)], "doc_a bigint, doc_b bigint"
+    ).filter("doc_a is not null")
+
+
 def _run_update(spark, old_edges, added, retracted):
     """update_components vs connected_components on the post-delta graph."""
     from deed_ocr_spark.queries.components import update_components
-
-    def edf(pairs):
-        return spark.createDataFrame(
-            pairs or [(None, None)], "doc_a bigint, doc_b bigint"
-        ).filter("doc_a is not null")
 
     cur = sorted((set(old_edges) | set(added)) - set(retracted))
     old_lab = _run(spark, old_edges)  # dict from union-find-checked helper
@@ -182,7 +161,12 @@ def _run_update(spark, old_edges, added, retracted):
         "doc_id bigint, component bigint",
     ).filter("doc_id is not null")
     got = _labels(
-        update_components(old_df, edf(cur), edf(added), edf(retracted))
+        update_components(
+            old_df,
+            _edges(spark, cur),
+            _edges(spark, added),
+            _edges(spark, retracted),
+        )
     )
     want = _union_find(cur)
     assert got == want, (old_edges, added, retracted, got, want)
@@ -232,6 +216,58 @@ def test_update_components_random_property(spark, seed):
     _run_update(spark, sorted(old), sorted(added), sorted(retracted))
 
 
+def test_update_components_without_retraction_matches_recompute(spark):
+    """A merge-only delta: labels equal connected_components(G'), and the
+    current pair graph is never read — with nothing retracted no cluster
+    is wounded, so there is nothing to re-solve from it."""
+    from pyspark.sql import functions as F
+
+    from deed_ocr_spark.queries.components import update_components
+
+    old_edges = [(1, 2), (2, 3), (10, 11), (20, 21)]
+    added = [(3, 10), (21, 30), (30, 31), (50, 51)]
+    cur = old_edges + added
+    old = connected_components(_edges(spark, old_edges)).localCheckpoint(
+        eager=True
+    )
+
+    @F.udf("bigint")
+    def unread(x):
+        raise RuntimeError("current_pairs read on a merge-only delta")
+
+    current = _edges(spark, cur).withColumn("doc_a", unread("doc_a"))
+    got = _labels(
+        update_components(
+            old, current, _edges(spark, added), _edges(spark, [])
+        )
+    )
+    assert got == _labels(connected_components(_edges(spark, cur)))
+
+
+def test_update_components_with_retraction_matches_recompute(spark):
+    """Retractions split two clusters while additions merge across them
+    and bring in new docs: labels equal connected_components(G')."""
+    from deed_ocr_spark.queries.components import update_components
+
+    old_edges = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)]
+    added = [(4, 10), (21, 40)]
+    retracted = [(2, 3), (11, 12)]
+    cur = sorted((set(old_edges) | set(added)) - set(retracted))
+    old = connected_components(_edges(spark, old_edges)).localCheckpoint(
+        eager=True
+    )
+    got = _labels(
+        update_components(
+            old,
+            _edges(spark, cur),
+            _edges(spark, added),
+            _edges(spark, retracted),
+        )
+    )
+    assert got == _labels(connected_components(_edges(spark, cur)))
+    assert got[11] == 3 and got[40] == 20 and 12 not in got
+
+
 def test_dup_components_incremental_matches_recompute(
     spark, tmp_path, monkeypatch
 ):
@@ -259,10 +295,12 @@ def test_dup_components_incremental_single_delta_and_race_refusal(
     spark, tmp_path, monkeypatch
 ):
     """Round-6 second review: (a) the incremental flow computes the
-    |new|×corpus delta exactly ONCE (ensure_dup_pairs_table reuses it via
-    delta_hint), and (b) a concurrent append widening the pairs table's
-    window past the label delta's raises instead of silently dropping the
-    concurrent docs' labels."""
+    |new|×corpus delta (textpipe.winnow_pair_delta) exactly ONCE — the
+    pairs table's maintenance computes it and the label delta reads the
+    same in-process result back — and (b) a concurrent append that makes
+    the pairs table's window differ from the label delta's raises instead
+    of silently dropping the concurrent docs' labels."""
+    import deed_ocr_spark.queries.textpipe as tp
     import deed_ocr_spark.signatures as sig
     from deed_ocr_spark.queries.components import (
         dup_components,
@@ -278,26 +316,28 @@ def test_dup_components_incremental_single_delta_and_race_refusal(
     _write_docs(spark, sf, 60, 90, 1, "append")
 
     calls = {"n": 0}
-    real_delta = sig.winnow_dup_pairs_delta
+    real_pair_delta = tp.winnow_pair_delta
 
     def counting(*a, **k):
         calls["n"] += 1
-        return real_delta(*a, **k)
+        return real_pair_delta(*a, **k)
 
-    monkeypatch.setattr(sig, "winnow_dup_pairs_delta", counting)
+    monkeypatch.setattr(tp, "winnow_pair_delta", counting)
     got = {
         r["doc_id"]: r["component"]
         for r in dup_components_incremental(spark, sf, old_labels, snap)
         .collect()
     }
-    assert calls["n"] == 1, "delta must run once (hint reused by ensure)"
+    assert calls["n"] == 1, "the |new|×corpus delta must run once per window"
     assert got == {
         r["doc_id"]: r["component"]
         for r in dup_components(spark, sf).collect()
     }
+    real_delta = sig.winnow_dup_pairs_delta
 
-    # (b) the race: another append lands between the label delta and the
-    # pairs-table ensure — the table's window is wider, labels must refuse
+    # (b) the race: another append lands right after the pairs table's
+    # maintenance took its delta — the label delta's window is wider than
+    # the table's, labels must refuse
     snap2 = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
     labels2 = dup_components(spark, sf).localCheckpoint(eager=True)
     _write_docs(spark, sf, 90, 120, 1, "append")
@@ -346,7 +386,10 @@ def _strided_labels(spark, edges, stride):
     prev = {(r["u"], r["v"]) for r in e.collect()}
     for _ in range(C.MAX_ROUNDS):
         for _ in range(stride):
-            e = C._small_star(C._symmetrize(C._large_star(C._symmetrize(e))))
+            n = C._round_partitions(spark, len(prev))
+            e = C._small_star(
+                C._symmetrize(C._large_star(C._symmetrize(e), n)), n
+            )
         e = e.localCheckpoint(eager=True)
         cur = {(r["u"], r["v"]) for r in e.collect()}
         if cur == prev:
@@ -400,22 +443,67 @@ def caller_parts(spark):
     spark.conf.set(_PARTS, prior)
 
 
-def test_components_restores_shuffle_partitions(spark, caller_parts):
-    """The per-round shuffle width is set on the session; the caller's
-    value is back once connected_components returns."""
+def _watch_rounds(spark, monkeypatch, caller_parts):
+    """Wrap the per-round checkpoint: assert the session's shuffle width
+    is the caller's at every checkpoint, and record each materialized
+    frame's Exchange widths with the edge count it came from."""
+    import re
+
+    import deed_ocr_spark.queries.components as C
+
+    seen = []
+    real = C._checkpoint_with_digest
+
+    def watched(e):
+        assert spark.conf.get(_PARTS) == caller_parts
+        plan = e._jdf.queryExecution().executedPlan().toString()
+        out, digest = real(e)
+        widths = [
+            int(w) for w in re.findall(r"Exchange hashpartitioning\(.*?, (\d+)\)", plan)
+        ]
+        seen.append((widths, digest[0]))
+        return out, digest
+
+    monkeypatch.setattr(C, "_checkpoint_with_digest", watched)
+    return seen
+
+
+def _assert_round_widths(spark, seen):
+    """Every star round runs exactly three exchanges, each as wide as
+    ``_round_partitions`` of the edge count the round started from."""
+    from deed_ocr_spark.queries.components import _round_partitions
+
+    assert len(seen) >= 2, seen
+    for (_w0, n_in), (widths, _n) in zip(seen, seen[1:]):
+        assert widths == [_round_partitions(spark, n_in)] * 3, seen
+
+
+def test_components_restores_shuffle_partitions(
+    spark, caller_parts, monkeypatch
+):
+    """connected_components never writes the session's shuffle width: the
+    caller's value holds at every round and after the return, and each
+    round's exchanges take their width from ``_round_partitions``."""
+    seen = _watch_rounds(spark, monkeypatch, caller_parts)
     edges = [(i, i + 1) for i in range(16)]
     assert _run(spark, edges) == _union_find(edges)
     assert spark.conf.get(_PARTS) == caller_parts
+    _assert_round_widths(spark, seen)
+    assert seen[1][0][0] != int(caller_parts)
 
 
 def test_components_restores_shuffle_partitions_on_raise(
     spark, caller_parts, monkeypatch
 ):
-    """A loop that hits MAX_ROUNDS raises, and the caller's shuffle width
-    is still restored."""
+    """A loop that hits MAX_ROUNDS raises; the caller's shuffle width was
+    never changed, and the one round it ran had the derived width."""
     import deed_ocr_spark.queries.components as C
 
+    seen = _watch_rounds(spark, monkeypatch, caller_parts)
     monkeypatch.setattr(C, "MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
         _run(spark, [(i, i + 1) for i in range(16)])
     assert spark.conf.get(_PARTS) == caller_parts
+    _assert_round_widths(spark, seen)
+    assert len(seen) == 2
+

@@ -52,3 +52,85 @@ def test_extraction_job_budget(spark, tmp_path):
     again, jobs = _jobs(spark, lambda: job("noop"))
     assert again == {k: v for k, v in full.items() if not k.startswith("wall_")}
     assert jobs <= NOOP_RESUME_JOBS, jobs
+
+
+# connected_components: the canonical-edge checkpoint (map stage +
+# result), then per star round its three exchanges plus the checkpoint's
+# result stage, then the read's centre distinct (map stage + result)
+def components_jobs(rounds: int) -> int:
+    return 4 * rounds + 4
+
+
+# 30 disjoint edges converge in 2 rounds
+DISJOINT_EDGES_JOBS = 12
+# update_components with additions only: the delta checkpoint, no
+# wounded-cluster work, connected_components over the contracted graph
+MERGE_ONLY_UPDATE_JOBS = 24
+# ensure_dup_pairs_table on the window a caller just took the delta of:
+# the delta is read back, only the merged table is written
+PAIRS_TABLE_AFTER_DELTA_JOBS = 4
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
+
+
+def test_components_round_budget(spark):
+    from deed_ocr_spark.queries.components import connected_components
+
+    chain = _edges(spark, [(i, i + 1) for i in range(511)])
+    stats = {}
+    rows, jobs = _jobs(
+        spark, lambda: connected_components(chain, stats=stats).collect()
+    )
+    assert stats["rounds"] == 10
+    assert len(rows) == 512 and {r["component"] for r in rows} == {0}
+    assert jobs <= components_jobs(stats["rounds"]), jobs
+
+    disjoint = _edges(spark, [(2 * i, 2 * i + 1) for i in range(30)])
+    rows, jobs = _jobs(spark, lambda: connected_components(disjoint).collect())
+    assert {(r["doc_id"], r["component"]) for r in rows} == {
+        (n, n - n % 2) for n in range(60)
+    }
+    assert jobs <= DISJOINT_EDGES_JOBS, jobs
+
+
+def test_merge_only_update_budget(spark):
+    from deed_ocr_spark.queries.components import update_components
+
+    old = spark.createDataFrame(
+        [(1, 1), (2, 1), (5, 5), (6, 5)], "doc_id bigint, component bigint"
+    )
+    added = [(2, 9), (5, 9)]
+    current = _edges(spark, [(1, 2), (5, 6)] + added)
+    none = _edges(spark, [(0, 0)]).limit(0)
+    rows, jobs = _jobs(
+        spark,
+        lambda: update_components(
+            old, current, _edges(spark, added), none
+        ).collect(),
+    )
+    assert {(r["doc_id"], r["component"]) for r in rows} == {
+        (1, 1), (2, 1), (5, 1), (6, 1), (9, 1)
+    }
+    assert jobs <= MERGE_ONLY_UPDATE_JOBS, jobs
+
+
+def test_pairs_table_after_delta_budget(spark, tmp_path, monkeypatch):
+    import deed_ocr_spark.signatures as sig
+    from tests.test_pair_delta import _pair_set, _write_docs
+
+    monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
+    sf = str(tmp_path / "sf")
+    _write_docs(spark, sf, 0, 60, 2, "overwrite")
+    sig.ensure_dup_pairs_table(spark, sf)
+    snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
+    _write_docs(spark, sf, 60, 90, 1, "append")
+    added, _retracted = sig.winnow_dup_pairs_delta(spark, sf, snap)
+    assert _pair_set(added)
+
+    ver, jobs = _jobs(spark, lambda: sig.ensure_dup_pairs_table(spark, sf))
+    assert jobs <= PAIRS_TABLE_AFTER_DELTA_JOBS, jobs
+    assert _pair_set(sig.read_signature_table(spark, ver)) == _pair_set(
+        sig._pairs_full_df(spark, sf, 64)
+    )

@@ -271,6 +271,56 @@ def test_pairs_table_append_goes_through_delta(spark, tmp_path, monkeypatch):
     assert sig.ensure_dup_pairs_table(spark, sf) == v2
 
 
+def test_pair_delta_reused_only_for_its_own_window(
+    spark, tmp_path, monkeypatch
+):
+    """The in-process delta result serves exactly its own window: the
+    pairs table's delta path reads back the delta a caller just took, a
+    second append (another window) computes afresh, and after an fps
+    rebuild the old window is refused rather than served. Each table
+    version equals a fresh full recompute."""
+    import deed_ocr_spark.queries.textpipe as tp
+
+    monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
+    sf = str(tmp_path / "sf")
+    _write_docs(spark, sf, 0, 60, 2, "overwrite")
+    sig.ensure_dup_pairs_table(spark, sf)
+    snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
+    calls = {"n": 0}
+    real = tp.winnow_pair_delta
+
+    def counting(*a, **k):
+        calls["n"] += 1
+        return real(*a, **k)
+
+    monkeypatch.setattr(tp, "winnow_pair_delta", counting)
+
+    def table_is_fresh():
+        ver = sig.ensure_dup_pairs_table(spark, sf)
+        stored = _pair_set(sig.read_signature_table(spark, ver))
+        assert stored == _pair_set(sig._pairs_full_df(spark, sf, 64))
+        return stored
+
+    _write_docs(spark, sf, 60, 90, 1, "append")
+    added, _r = sig.winnow_dup_pairs_delta(spark, sf, snap)
+    assert _pair_set(added) and calls["n"] == 1
+    table_is_fresh()
+    assert calls["n"] == 1, "the table's delta path must reuse the delta"
+
+    snap2 = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
+    _write_docs(spark, sf, 90, 120, 1, "append")
+    table_is_fresh()
+    assert calls["n"] == 2, "a new window must compute its own delta"
+    added2, _r2 = sig.winnow_dup_pairs_delta(spark, sf, snap2)
+    assert calls["n"] == 2 and _pair_set(added2)
+
+    # rewrite the corpus in place: the fps family is rebuilt
+    _write_docs(spark, sf, 0, 120, 2, "overwrite")
+    with pytest.raises(ValueError, match="rebuilt"):
+        sig.winnow_dup_pairs_delta(spark, sf, snap2)
+    assert table_is_fresh()
+
+
 def test_pairs_table_rebuild_falls_back_to_full(spark, tmp_path, monkeypatch):
     """A REWRITTEN old part (fps family rebuilt) breaks delta provenance —
     the pairs table must take the full-recompute path and still be exact."""
@@ -354,6 +404,9 @@ def _delta_at_threshold(spark, monkeypatch, sf, snap, threshold):
         return real(*a, **k)
 
     monkeypatch.setattr(sig, "ensure_bucketed_signature_table", counting)
+    # forget the in-process delta: a read-back of the same window would
+    # answer without choosing a route
+    sig._pair_delta_memo = None
     prev = spark.conf.get(key)
     spark.conf.set(key, threshold)
     try:
