@@ -53,7 +53,8 @@ MAX_ROUNDS = 64
 # edge count and passes it to its three ``repartition(n, "u")`` calls; a
 # repartition by number is never coalesced by AQE, so the width is exact,
 # and the session's ``spark.sql.shuffle.partitions`` is neither read nor
-# written by a round.
+# written by a round. The canonical-edge distinct before the first round
+# is sized the same way, from the input plan's edge estimate.
 EDGES_PER_PARTITION = 2_000_000
 MAX_ROUND_PARTITIONS = 4096
 
@@ -69,10 +70,30 @@ def _round_partitions(spark: SparkSession, n_edges: int) -> int:
     )
 
 
+def _planned_rows(df: DataFrame) -> int:
+    """``df``'s row count as its optimized plan estimates it, with no
+    job: the plan's row count when it has one, else its size over the
+    row width. A plan without a size statistic (local data, a checkpoint
+    of it) estimates 0, which sizes an exchange at the cores."""
+    jspark = df.sparkSession._jsparkSession
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    if stats.rowCount().isDefined():
+        return int(str(stats.rowCount().get()))
+    size = int(str(stats.sizeInBytes()))
+    if size >= jspark.sessionState().conf().defaultSizeInBytes():
+        return 0
+    return size // (8 + df._jdf.schema().defaultSize())
+
+
 def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
-    """Distinct undirected edges as (u, v), self-loops dropped."""
+    """Distinct undirected edges as (u, v), self-loops dropped. The
+    distinct is the run's first exchange, over the unshrunk input, so it
+    takes a round's width for the planned edge count rather than the
+    session's ``spark.sql.shuffle.partitions``."""
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    return e.filter(F.col("u") != F.col("v")).distinct()
+    e = e.filter(F.col("u") != F.col("v"))
+    n = _round_partitions(e.sparkSession, _planned_rows(e))
+    return e.repartition(n, "u").distinct()
 
 
 def _edges_of(df: DataFrame, *ends) -> DataFrame:
@@ -126,17 +147,22 @@ def _small_star(sym: DataFrame, n_parts: int) -> DataFrame:
 
 
 def _release_checkpoint(df: DataFrame) -> None:
-    """Free a superseded localCheckpoint's blocks. They are NON-EVICTABLE
-    (lineage is gone, so Spark pins them) and ``DataFrame.unpersist()`` is
-    a no-op for them — the persistence lives on the underlying RDD inside
-    the LogicalRDD plan node, not in the CacheManager. Verified: the plan
-    route drops the entry from getPersistentRDDs; without it a 10⁸-edge
-    run accumulates every round's blocks and starves execution memory
-    (UNABLE_TO_ACQUIRE_MEMORY — observed). Best-effort: if the internal
-    accessor moves in a future Spark, blocks merely stay resident (the
-    pre-round-6 behavior)."""
+    """Free the blocks of every localCheckpoint ``df`` reads (``df``
+    itself when it is one), once they are superseded. They are
+    NON-EVICTABLE (lineage is gone, so Spark pins them) and
+    ``DataFrame.unpersist()`` is a no-op for them — the persistence lives
+    on the underlying RDD of each LogicalRDD plan leaf, not in the
+    CacheManager. Verified: the plan route drops the entry from
+    getPersistentRDDs; without it a 10⁸-edge run accumulates every
+    round's blocks and starves execution memory (UNABLE_TO_ACQUIRE_MEMORY
+    — observed). Best-effort: if the internal accessor moves in a future
+    Spark, blocks merely stay resident (the pre-round-6 behavior)."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)
     except Exception:  # pragma: no cover — internal API drift
         pass
 

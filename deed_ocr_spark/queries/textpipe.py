@@ -129,27 +129,25 @@ def d5_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signature bit is the vote sign. Bit k of a token = high bit of hex nibble
 # k of md5(token), so Spark and DuckDB agree exactly.
 def d6_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _simhash(spark, sf_dir, F.md5, _SIMHASH_VOTES)
+
+
+def _simhash(spark: SparkSession, sf_dir: str, hash_fn, votes: list) -> DataFrame:
+    """(doc_id, simhash) over the documents' tokens hashed by ``hash_fn``
+    into column ``h``, from the 16 vote aggregates as SQL text. One
+    ``F.expr`` per column: a column tree built from the functions API
+    costs ~200 driver round trips per query build, parsed text a
+    handful."""
     d = _docs_rebalanced(spark, sf_dir)
     tok = (
         d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
         .filter(F.col("tok") != "")
-        .withColumn("h", F.md5("tok"))
+        .withColumn("h", hash_fn("tok"))
     )
-    votes = [
-        F.sum(
-            F.when(
-                F.substring("h", k + 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"),
-                1,
-            ).otherwise(-1)
-        ).alias(f"v{k}")
-        for k in range(16)
-    ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    sim = None
-    for k in range(16):
-        bit = F.when(F.col(f"v{k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
-        sim = bit if sim is None else sim + bit
-    return agg.select("doc_id", sim.cast("bigint").alias("simhash"))
+    agg = tok.groupBy("doc_id").agg(*map(F.expr, votes))
+    return agg.select(
+        "doc_id", F.expr(f"CAST({_SIMHASH_SUM_SQL} AS BIGINT) AS simhash")
+    )
 
 
 # --- D6b: production SimHash twin (rows-only) --------------------------------
@@ -160,25 +158,13 @@ def d6_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # long sums — the form you run at 100 TB. d6 (md5) remains the
 # DuckDB-portable oracle anchor; tests assert the two schemes agree on
 # duplicate detection and Hamming-distance ordering.
+_SIMHASH_FAST_VOTES = [
+    f"sum(((h >> {k}) & 1) * 2 - 1) AS v{k}" for k in range(16)
+]
+
+
 def d6b_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rebalanced(spark, sf_dir)
-    tok = (
-        d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
-        .filter(F.col("tok") != "")
-        .withColumn("h", F.xxhash64("tok"))
-    )
-    votes = [
-        F.sum(
-            F.shiftright(F.col("h"), k).bitwiseAND(F.lit(1)) * 2 - 1
-        ).alias(f"v{k}")
-        for k in range(16)
-    ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    sim = None
-    for k in range(16):
-        bit = F.when(F.col(f"v{k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
-        sim = bit if sim is None else sim + bit
-    return agg.select("doc_id", sim.cast("bigint").alias("simhash"))
+    return _simhash(spark, sf_dir, F.xxhash64, _SIMHASH_FAST_VOTES)
 
 
 # --- D8: MinHash signatures over 3-token shingles ---------------------------
@@ -397,11 +383,13 @@ _STOPWORD_HITS_SQL = " + ".join(
     for w in STOPWORDS
 )
 
-_SIMHASH_VOTES_SQL = ", ".join(
+# d6's votes and sum: the DuckDB oracle's text, and d6_simhash's columns
+_SIMHASH_VOTES = [
     "CAST(SUM(CASE WHEN substr(h, {p}, 1) IN ('8','9','a','b','c','d','e','f') "
     "THEN 1 ELSE -1 END) AS BIGINT) AS v{k}".format(p=k + 1, k=k)
     for k in range(16)
-)
+]
+_SIMHASH_VOTES_SQL = ", ".join(_SIMHASH_VOTES)
 _SIMHASH_SUM_SQL = " + ".join(
     f"(CASE WHEN v{k} > 0 THEN {1 << k} ELSE 0 END)" for k in range(16)
 )

@@ -52,7 +52,8 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deed_ocr_spark.queries.common import rebalanced
+from deed_ocr_spark.queries.common import read_parquet, rebalanced
+from deed_ocr_spark.queries.components import _release_checkpoint
 from deed_ocr_spark.queries.textpipe import _band_rows, _minhash_sig_from
 
 SHINGLES = "shingles"
@@ -96,7 +97,7 @@ def read_signature_table(spark: SparkSession, table_dir: str) -> DataFrame:
     """Scan a signature table VERSION directory, including its incremental
     add-* subdirectories (recursive listing; underscore-prefixed
     temp/metadata files are ignored by the reader)."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(table_dir)
+    return read_parquet(spark, table_dir, recursiveFileLookup="true")
 
 
 def read_partitioned_table(
@@ -820,7 +821,7 @@ def ensure_signature_table(
             paths = [os.path.join(docs_path, n) for n in parts]
         else:
             paths = [docs_path]
-        docs = rebalanced(spark.read.parquet(*paths), "doc_id")
+        docs = rebalanced(read_parquet(spark, *paths), "doc_id")
         return _family_df_of(docs, family)
 
     return ensure_table(spark, family_dir, listing, build)
@@ -964,11 +965,11 @@ def winnow_dup_pairs_delta(
         return _split_pair_delta(memo[1])
     old_paths = base + old_dirs
     old_rows = (
-        spark.read.parquet(*old_paths).select("doc_id", "fp")
+        read_parquet(spark, *old_paths).select("doc_id", "fp")
         if old_paths
-        else spark.read.parquet(*new_dirs).select("doc_id", "fp").limit(0)
+        else read_parquet(spark, *new_dirs).select("doc_id", "fp").limit(0)
     )
-    new_rows = spark.read.parquet(*new_dirs).select("doc_id", "fp")
+    new_rows = read_parquet(spark, *new_dirs).select("doc_id", "fp")
     thresh = _size_bytes(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
     )
@@ -1017,13 +1018,15 @@ def winnow_dup_pairs_delta(
     added, retracted = winnow_pair_delta(
         old_rows, new_rows, max_df=max_df, corpus_fps=corpus_fps
     )
-    both = (
-        added.select("doc_a", "doc_b", F.lit(True).alias("added"))
-        .unionByName(
-            retracted.select("doc_a", "doc_b", F.lit(False).alias("added"))
-        )
-        .localCheckpoint(eager=True)
+    tagged = added.select(
+        "doc_a", "doc_b", F.lit(True).alias("added")
+    ).unionByName(
+        retracted.select("doc_a", "doc_b", F.lit(False).alias("added"))
     )
+    both = tagged.localCheckpoint(eager=True)
+    # the delta's working-set checkpoints (new rows, matching old rows,
+    # the cap frames on a crossing) are read by nothing but ``tagged``
+    _release_checkpoint(tagged)
     _remember_pair_delta(key, both)
     return _split_pair_delta(both)
 
@@ -1036,8 +1039,6 @@ _pair_delta_lock = threading.Lock()
 
 
 def _remember_pair_delta(key: tuple, both: DataFrame) -> None:
-    from deed_ocr_spark.queries.components import _release_checkpoint
-
     global _pair_delta_memo
     with _pair_delta_lock:
         prev, _pair_delta_memo = _pair_delta_memo, (key, both)
@@ -1297,9 +1298,7 @@ def ensure_bucketed_signature_table(
                 # register over the existing files (bucket ids ride the
                 # file names), never rewrite a dir a concurrent reader
                 # may be scanning
-                schema_ddl = (
-                    spark.read.parquet(data_dir)._jdf.schema().toDDL()
-                )
+                schema_ddl = read_parquet(spark, data_dir)._jdf.schema().toDDL()
                 spark.sql(
                     f"CREATE TABLE {name} ({schema_ddl}) USING PARQUET "
                     f"CLUSTERED BY ({key}) SORTED BY ({key}) "

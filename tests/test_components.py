@@ -372,8 +372,18 @@ def test_release_checkpoint_frees_pinned_blocks(spark):
     _release_checkpoint(df)
     assert n_persistent() == base, (
         "release was a no-op — the internal accessor path "
-        "(queryExecution().analyzed().rdd()) has drifted"
+        "(queryExecution().analyzed() leaves' rdd()) has drifted"
     )
+    # a frame derived from checkpoints releases every one it reads
+    a = spark.range(0, 100).localCheckpoint(eager=True)
+    b = spark.range(50, 150).localCheckpoint(eager=True)
+    ids = {f._jdf.queryExecution().analyzed().rdd().id() for f in (a, b)}
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    assert ids <= pinned()
+    _release_checkpoint(a.join(b, "id").filter("id > 60"))
+    assert not ids & pinned()
 
 
 def _strided_labels(spark, edges, stride):
@@ -469,11 +479,15 @@ def _watch_rounds(spark, monkeypatch, caller_parts):
 
 
 def _assert_round_widths(spark, seen):
-    """Every star round runs exactly three exchanges, each as wide as
-    ``_round_partitions`` of the edge count the round started from."""
+    """The canonical-edge checkpoint runs one exchange, as wide as
+    ``_round_partitions`` of the edges it holds, and every star round
+    runs exactly three, each as wide as ``_round_partitions`` of the edge
+    count the round started from."""
     from deed_ocr_spark.queries.components import _round_partitions
 
     assert len(seen) >= 2, seen
+    widths0, n_edges = seen[0]
+    assert widths0 == [_round_partitions(spark, n_edges)], seen
     for (_w0, n_in), (widths, _n) in zip(seen, seen[1:]):
         assert widths == [_round_partitions(spark, n_in)] * 3, seen
 
@@ -489,6 +503,7 @@ def test_components_restores_shuffle_partitions(
     assert _run(spark, edges) == _union_find(edges)
     assert spark.conf.get(_PARTS) == caller_parts
     _assert_round_widths(spark, seen)
+    assert seen[0][0][0] != int(caller_parts)
     assert seen[1][0][0] != int(caller_parts)
 
 

@@ -134,3 +134,22 @@ def test_pairs_table_after_delta_budget(spark, tmp_path, monkeypatch):
     assert _pair_set(sig.read_signature_table(spark, ver)) == _pair_set(
         sig._pairs_full_df(spark, sf, 64)
     )
+
+
+def test_bench_leaves_plan_without_jobs(spark):
+    """Building a bench leaf's plan launches no Spark job once its tables
+    are known to the session: no schema inference, no sizing action. The
+    leaf list is bench.py's own."""
+    import bench
+    from deed_ocr_spark.queries import QUERIES
+    from deed_ocr_spark.queries.textpipe import d6b_simhash_fast
+    from tests.test_queries_oracle import SF_DIR as sf
+
+    queries = {**QUERIES, "d6b_simhash_fast": d6b_simhash_fast}
+    for name in bench.BENCH_QUERIES:
+        queries[name](spark, sf)
+    jobs = {
+        name: _jobs(spark, lambda: queries[name](spark, sf))[1]
+        for name in bench.BENCH_QUERIES
+    }
+    assert jobs == dict.fromkeys(bench.BENCH_QUERIES, 0), jobs

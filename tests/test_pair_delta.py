@@ -221,6 +221,45 @@ def test_delta_rejects_overlapping_doc_ids(spark):
         winnow_pair_delta(old, relanded, max_df=4)
 
 
+@pytest.mark.parametrize("threshold", ["1g", "-1"])
+def test_table_level_delta_pins_only_its_result(
+    spark, tmp_path, monkeypatch, threshold
+):
+    """The delta's working-set checkpoints (new rows, matching old rows,
+    and on a cap crossing the affected rows and their dfs) are released
+    once the tagged result has materialized: the context's pinned RDDs
+    gain the memoized result alone, on either reduction route."""
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
+    sf = str(tmp_path / "sf")
+    _write_docs(spark, sf, 0, 60, 2, "overwrite")
+    snap = sig.processed_parts(spark, sf, sig.WINNOW_FPS)
+    # a third copy of doc 6's text (shared with doc 7) pushes their
+    # fingerprints over max_df=2, retracting the pair
+    text6 = " ".join(f"w{6 * 31 + j:06d}" for j in range(12))
+    spark.createDataFrame([(90, text6)], "doc_id bigint, text string").write.mode(
+        "append"
+    ).parquet(os.path.join(sf, "documents.parquet"))
+    sig.ensure_signature_table(spark, sf, sig.WINNOW_FPS)
+    sig._pair_delta_memo = None
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        before = pinned()
+        added, retracted = sig.winnow_dup_pairs_delta(spark, sf, snap, max_df=2)
+        result = sig._pair_delta_memo[1]._jdf.queryExecution().analyzed().rdd()
+        # ids, not a count: the context cleaner may drop an earlier
+        # test's blocks meanwhile
+        assert pinned() - before == {result.id()}
+        assert _pair_set(retracted) == {(6, 7)} and not _pair_set(added)
+    finally:
+        spark.conf.set(key, prev)
+        _drop_winnow_mirrors(spark)
+
+
 # --- durable dup-pairs table (round-6 VERDICT #2) ------------------------------
 def test_pairs_table_full_build_matches_d13(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sig, "SIG_CACHE_ROOT", str(tmp_path / "cache"))
